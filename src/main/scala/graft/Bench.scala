@@ -124,21 +124,5 @@ object Bench {
       """"full":"BENCH.json"}"""
     println(compact)
     spark.stop()
-    // The driver parses a stdout TAIL for the JSON line, but under
-    // non-forked `sbt runMain` every println is captured by sbt's
-    // logger and re-emitted prefixed with "[info] ", so no line starts
-    // with '{' and the parse fails (BENCH_r12/r13 both carry
-    // "parsed": null despite rc 0). Writing straight to the process
-    // file descriptors bypasses sbt's System.out/err capture: these
-    // are the LAST lines on the raw streams, unprefixed. Full line
-    // first (complete per-query map for whole-stdout parsers), compact
-    // line last (fits the ~2000-char tail budget); same on stderr as
-    // belt-and-braces.
-    def raw(fd: java.io.FileDescriptor) =
-      new java.io.PrintStream(new java.io.FileOutputStream(fd), true, "UTF-8")
-    val out = raw(java.io.FileDescriptor.out)
-    out.println(line)
-    out.println(compact)
-    raw(java.io.FileDescriptor.err).println(compact)
   }
 }

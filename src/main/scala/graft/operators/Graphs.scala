@@ -226,22 +226,6 @@ object Graphs {
     */
   private val DriverGraphMaxEdges = 2000000L
 
-  /** FUSED probe + collect: bring back up to `bound` rows in ONE
-    * action, or None if the relation is larger. An under-bound
-    * relation previously paid the limit-probe scan AND a second full
-    * collect scan; the fused form bills one. An over-bound relation
-    * still short-circuits at bound+1 rows (CollectLimit executes
-    * partitions incrementally) — the extra cost vs the count probe is
-    * only shipping the first bound+1 rows, and callers taking this
-    * path are about to run a far heavier distributed loop anyway.
-    */
-  private def collectUnderBound(df: DataFrame,
-                                bound: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (bound <= 0) return None
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
-
   /** Int-indexed CSR adjacency built from collected (u, v) edge rows
     * — primitive arrays (a boxed HashSet adjacency measured ~10×
     * slower at 1M edges — the collect is cheap, the peel must be
@@ -1195,17 +1179,20 @@ object Graphs {
     * [[graft.SharedRelations.cachedValue]].
     */
   final class TradeGraph private[Graphs] (rows0: Array[org.apache.spark.sql.Row]) {
-    private val nArcs = rows0.length * 2
     private val idx = new java.util.HashMap[Long, Integer](rows0.length * 4)
-    private val keysBuf = new scala.collection.mutable.ArrayBuffer[Long]()
-    private def id(x: Long): Int = {
-      val got = idx.get(x)
-      if (got != null) got.intValue
-      else { idx.put(x, keysBuf.length); keysBuf += x; keysBuf.length - 1 }
-    }
-    private val srcI = new Array[Int](nArcs)
-    private val dstI = new Array[Int](nArcs)
-    locally {
+    // node ids and arc endpoints are constructor-local: only the id
+    // map, the id -> node table and the CSR arrays outlive the build
+    private val (keys, deg, start, nbr) = {
+      val nArcs = rows0.length * 2
+      val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0
+      def id(x: Long): Int = {
+        val got = idx.get(x)
+        if (got != null) got.intValue
+        else { idx.put(x, n); ids += x; n += 1; n - 1 }
+      }
+      val srcI = new Array[Int](nArcs)
+      val dstI = new Array[Int](nArcs)
       var i = 0
       while (i < rows0.length) {
         val c = id(rows0(i).getLong(0) * 2)
@@ -1214,19 +1201,19 @@ object Graphs {
         srcI(2 * i + 1) = s; dstI(2 * i + 1) = c
         i += 1
       }
-    }
-    val nNodes: Int = keysBuf.length
-    private val keys = keysBuf.toArray
-    private val deg = new Array[Int](nNodes)
-    locally { var i = 0; while (i < nArcs) { deg(srcI(i)) += 1; i += 1 } }
-    private val start = new Array[Int](nNodes + 1)
-    locally { var i = 0; while (i < nNodes) { start(i + 1) = start(i) + deg(i); i += 1 } }
-    private val nbr = new Array[Int](nArcs)
-    locally {
-      val fill = java.util.Arrays.copyOf(start, nNodes)
-      var i = 0
+      val deg = new Array[Int](n)
+      i = 0
+      while (i < nArcs) { deg(srcI(i)) += 1; i += 1 }
+      val start = new Array[Int](n + 1)
+      i = 0
+      while (i < n) { start(i + 1) = start(i) + deg(i); i += 1 }
+      val nbr = new Array[Int](nArcs)
+      val fill = java.util.Arrays.copyOf(start, n)
+      i = 0
       while (i < nArcs) { nbr(fill(srcI(i))) = dstI(i); fill(srcI(i)) += 1; i += 1 }
+      (ids.result(), deg, start, nbr)
     }
+    val nNodes: Int = keys.length
 
     /** (encoded node, pico rank) after `iters` exact damped rounds —
       * [[Graphs.pageRankPico]]'s driver arithmetic verbatim (same

@@ -41,7 +41,7 @@ object IvfIndex {
     */
   def train(e: DataFrame, c: Int, iters: Int, dims: Int,
             driverMaxVectors: Long = DriverTrainMaxVectors): Array[Array[Long]] = {
-    QualityClassifier.collectUnderBound(
+    collectUnderBound(
         e.select(col("vec_id"), col("q")), driverMaxVectors) match {
       case Some(rows) => return trainDriver(rows, c, iters, dims)
       case None =>

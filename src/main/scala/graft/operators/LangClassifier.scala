@@ -76,7 +76,7 @@ object LangClassifier {
     // bounded driver fast path (see QualityClassifier.train): one
     // collect, all iterations × classes advanced in a driver loop
     // with the distributed loop's exact arithmetic
-    QualityClassifier.collectUnderBound(
+    collectUnderBound(
         rel.select(col("lang"), col("bs")), driverMaxDocs) match {
       case Some(rows) => return trainDriver(rows, langs, buckets, iters, lr)
       case None =>

@@ -82,16 +82,6 @@ object QualityClassifier {
     */
   private[operators] val DriverTrainMaxDocs = 200000L
 
-  /** FUSED probe + collect (the Graphs discipline): up to `bound`
-    * rows in ONE action, or None if the relation is larger —
-    * CollectLimit short-circuits at bound+1 rows. */
-  private[operators] def collectUnderBound(df: DataFrame,
-      bound: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (bound <= 0) return None
-    val rows = df.limit(math.min(bound + 1, Int.MaxValue.toLong).toInt).collect()
-    if (rows.length <= bound) Some(rows) else None
-  }
-
   /** Unpack a collected long-array column to a primitive array. */
   private[operators] def bucketLongArr(r: org.apache.spark.sql.Row, i: Int): Array[Long] = {
     val s = r.getSeq[Long](i)

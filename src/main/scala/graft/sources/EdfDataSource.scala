@@ -1,20 +1,11 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for ESRF Data Format (`.edf`) detector
@@ -32,33 +23,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (LowByteFirst/HighByteFirst), `Size` (data bytes);
   *   - the binary image (`Size` bytes) follows immediately.
   *
-  * Cluster model mirrors the SPE source: planning walks HEADERS ONLY
-  * (bounded 512-byte reads + a seek over each data section — no data
-  * bytes are read), yielding per-frame descriptors with exact byte
-  * offsets; partitions cover contiguous frame runs capped at
-  * `maxPartitionBytes`; equality/range/IN filters on `frame` prune
-  * partitions before any data read, and pruning the `pixels` column
-  * skips the data sections entirely (metadata-only reads cost header
-  * bytes). Readers seek straight to their frames' data offsets.
+  * Planning walks the block headers (bounded 512-byte reads and a seek
+  * over each data section) into one [[EdfSchema.EdfFrame]] per block,
+  * cached in a validated `<file>.edfidx` sidecar (`indexCache`,
+  * default on). Pushdown, partitioning, the live tail and the reader
+  * are the shared [[FrameSource]] ones.
   *
   * Schema (one row per image block, `frame` = 0-based ordinal):
   *   file string, frame long, width int, height int, n_frames long,
   *   datatype string, byte_order string, pixels array<double>
   */
-class EdfDataSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class EdfDataSource extends FrameSource {
   override def shortName(): String = "edf"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = EdfSchema.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val paths = Option(properties.get("paths"))
-      .map(p => SpecSchema.parseJsonPaths(p))
-      .orElse(Option(properties.get("path")).map(Seq(_)))
-      .getOrElse(throw new IllegalArgumentException("edf reader needs a path"))
-    new EdfTable(paths, Option(properties.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(SpeSchema.DefaultMaxPartitionBytes),
-      Option(properties.get("indexCache")).forall(_.toBoolean))
-  }
+  override protected def format(options: util.Map[String, String]): FrameFormat =
+    EdfFormat(Option(options.get("indexCache")).forall(_.toBoolean))
 }
 
 object EdfSchema {
@@ -80,15 +58,30 @@ object EdfSchema {
 
   final case class EdfFrame(dataOffset: Long, width: Int, height: Int,
                             dataType: String, littleEndian: Boolean, size: Long)
+      extends FrameDesc {
+    override def sample: SampleKind = EdfSchema.sample(dataType)
+    override def dataRanges: Seq[(Long, Long)] = Seq((dataOffset, size))
+    override def dataBytes: Long = size
+    override def datatypeName: String = dataType
+    override def column(name: String): Any = name match {
+      case "byte_order" =>
+        UTF8String.fromString(if (littleEndian) "LowByteFirst" else "HighByteFirst")
+    }
+  }
 
-  def bytesPerPixel(dataType: String): Int = dataType match {
-    case "UnsignedByte" | "SignedByte" => 1
-    case "UnsignedShort" | "SignedShort" => 2
-    case "UnsignedInteger" | "SignedInteger" | "UnsignedLong" | "SignedLong" |
-         "FloatValue" | "Float" => 4
-    case "DoubleValue" => 8
+  def sample(dataType: String): SampleKind = dataType match {
+    case "UnsignedByte" => SampleKind.U8
+    case "SignedByte" => SampleKind.I8
+    case "UnsignedShort" => SampleKind.U16
+    case "SignedShort" => SampleKind.I16
+    case "UnsignedInteger" | "UnsignedLong" => SampleKind.U32
+    case "SignedInteger" | "SignedLong" => SampleKind.I32
+    case "FloatValue" | "Float" => SampleKind.F32
+    case "DoubleValue" => SampleKind.F64
     case d => throw new IllegalArgumentException(s"unsupported EDF DataType '$d'")
   }
+
+  def bytesPerPixel(dataType: String): Int = sample(dataType).bytes
 
   private val KeyVal = """\s*([A-Za-z0-9_]+)\s*=\s*(.*?)\s*;?\s*""".r
 
@@ -96,8 +89,11 @@ object EdfSchema {
     * over, never read. Returns the per-frame descriptors in file
     * order. Strict: truncation throws with the path in the message.
     */
-  def indexFile(path: String, conf: Configuration): Seq[EdfFrame] =
-    walk(path, conf, startPos = 0L, lenient = false)._1
+  def indexFile(path: String, conf: Configuration): Seq[EdfFrame] = {
+    val out = mutable.ArrayBuffer[EdfFrame]()
+    walk(path, conf, 0L, out)
+    out.toSeq
+  }
 
   /** Header walk with a `<file>.edfidx` sidecar cache — the same
     * validated-cache discipline as the spec source's `.specidx`
@@ -155,402 +151,81 @@ object EdfSchema {
     } finally out.close()
   }
 
-  /** Incremental, LIVE-file-tolerant walk from `startPos`: a
-    * truncated header or data section (a block mid-write) STOPS the
-    * walk instead of throwing, and the returned end position lets the
-    * next trigger resume without re-reading old headers. Returns
-    * (complete frames found, resume position).
+  /** Walk the block headers from byte `startPos` (a block boundary),
+    * appending one descriptor per complete block to `out`; data
+    * sections are seeked over, never read. A truncated or malformed
+    * block throws with the path in the message — after the blocks
+    * before it were appended, which is what a live tail keeps.
     */
   def walk(path: String, conf: Configuration, startPos: Long,
-           lenient: Boolean): (Seq[EdfFrame], Long) = {
+           out: mutable.Growable[EdfFrame]): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
     val in = fs.open(p)
     try {
-      val frames = mutable.ArrayBuffer[EdfFrame]()
       var pos = startPos
-      var stopped = false
-      while (!stopped && pos + HeaderChunk <= len) {
+      while (pos + HeaderChunk <= len) {
         // accumulate 512-byte chunks until one ends with '}' (+ \n)
         val sb = new java.lang.StringBuilder
         var headerEnd = -1L
         var cur = pos
-        while (headerEnd < 0 && !stopped) {
+        while (headerEnd < 0) {
           require(cur - pos < MaxHeaderBytes, s"$path: unterminated EDF header at $pos")
-          if (cur + HeaderChunk > len) {
-            // header mid-write: wait for the rest (lenient) or fail
-            require(lenient, s"$path: truncated EDF header at $pos")
-            stopped = true
-          } else {
-            val chunk = new Array[Byte](HeaderChunk)
-            in.readFully(cur, chunk)
-            sb.append(new String(chunk, "ISO-8859-1"))
-            cur += HeaderChunk
-            val t = sb.toString
-            val trimmed = t.reverse.dropWhile(c => c == ' ' || c == '\n' || c == '\r').reverse
-            if (trimmed.endsWith("}")) headerEnd = cur
-          }
+          require(cur + HeaderChunk <= len, s"$path: truncated EDF header at $pos")
+          val chunk = new Array[Byte](HeaderChunk)
+          in.readFully(cur, chunk)
+          sb.append(new String(chunk, "ISO-8859-1"))
+          cur += HeaderChunk
+          val t = sb.toString
+          val trimmed = t.reverse.dropWhile(c => c == ' ' || c == '\n' || c == '\r').reverse
+          if (trimmed.endsWith("}")) headerEnd = cur
         }
-        if (!stopped) {
-          val text = sb.toString
-          require(text.dropWhile(c => c == ' ' || c == '\n').startsWith("{"),
-            s"$path: EDF block at $pos does not start with '{'")
-          val kv = text.substring(text.indexOf('{') + 1, text.lastIndexOf('}'))
-            .split('\n').toSeq
-            .collect { case KeyVal(k, v) if v.nonEmpty => k -> v }
-            .toMap
-          def need(k: String): String = kv.getOrElse(k,
-            throw new IllegalArgumentException(s"$path: EDF header at $pos missing $k"))
-          val w = need("Dim_1").toInt
-          val h = need("Dim_2").toInt
-          val dt = need("DataType")
-          val size = kv.get("Size").map(_.toLong)
-            .getOrElse(w.toLong * h * bytesPerPixel(dt))
-          val little = kv.getOrElse("ByteOrder", "LowByteFirst") != "HighByteFirst"
-          require(w > 0 && h > 0 && size == w.toLong * h * bytesPerPixel(dt),
-            s"$path: inconsistent EDF block at $pos (${w}x$h $dt, Size $size)")
-          // the reader allocates one Array[Byte] per data section —
-          // fail at index time, not with a corrupt read at scan time
-          require(size <= Int.MaxValue,
-            s"$path: EDF data section at $pos is $size bytes (> 2 GiB unsupported)")
-          if (headerEnd + size > len) {
-            // data section mid-write: hold the frame back
-            require(lenient, s"$path: truncated EDF data at $headerEnd")
-            stopped = true
-          } else {
-            frames += EdfFrame(headerEnd, w, h, dt, little, size)
-            pos = headerEnd + size
-          }
-        }
+        val text = sb.toString
+        require(text.dropWhile(c => c == ' ' || c == '\n').startsWith("{"),
+          s"$path: EDF block at $pos does not start with '{'")
+        val kv = text.substring(text.indexOf('{') + 1, text.lastIndexOf('}'))
+          .split('\n').toSeq
+          .collect { case KeyVal(k, v) if v.nonEmpty => k -> v }
+          .toMap
+        def need(k: String): String = kv.getOrElse(k,
+          throw new IllegalArgumentException(s"$path: EDF header at $pos missing $k"))
+        val w = need("Dim_1").toInt
+        val h = need("Dim_2").toInt
+        val dt = need("DataType")
+        val size = kv.get("Size").map(_.toLong)
+          .getOrElse(w.toLong * h * bytesPerPixel(dt))
+        val little = kv.getOrElse("ByteOrder", "LowByteFirst") != "HighByteFirst"
+        require(w > 0 && h > 0 && size == w.toLong * h * bytesPerPixel(dt),
+          s"$path: inconsistent EDF block at $pos (${w}x$h $dt, Size $size)")
+        // the reader allocates one Array[Byte] per data section —
+        // fail at index time, not with a corrupt read at scan time
+        require(size <= Int.MaxValue,
+          s"$path: EDF data section at $pos is $size bytes (> 2 GiB unsupported)")
+        require(headerEnd + size <= len, s"$path: truncated EDF data at $headerEnd")
+        out += EdfFrame(headerEnd, w, h, dt, little, size)
+        pos = headerEnd + size
       }
-      (frames.toSeq, pos)
     } finally in.close()
   }
 }
 
-final case class EdfInputPartition(path: String, frameStart: Long, nFrames: Long,
-                                   frames: Seq[EdfSchema.EdfFrame]) extends InputPartition
+/** EDF blocks only ever append, so the live tail resumes where the
+  * last complete block's data ends: a trigger reads only the headers
+  * appended since the previous one, never old headers, never data. */
+final case class EdfFormat(indexCache: Boolean) extends FrameFormat {
+  override def schema: StructType = EdfSchema.schema
 
-class EdfTable(paths: Seq[String], maxPartBytes: Long,
-               indexCache: Boolean = true) extends Table with SupportsRead {
-  override def name(): String = s"edf(${paths.mkString(",")})"
-  override def schema(): StructType = EdfSchema.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EdfScanBuilder(paths, maxPartBytes, indexCache)
-}
+  override def index(meta: SpecFileMeta, conf: Configuration): FrameStack =
+    FrameSeq(EdfSchema.indexWithCache(meta, conf, indexCache).toVector)
 
-class EdfScanBuilder(paths: Seq[String], maxPartBytes: Long,
-                     indexCache: Boolean = true)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = EdfSchema.schema
-  private var frameEq: Option[Set[Long]] = None
-  private var frameLo: Long = Long.MinValue
-  private var frameHi: Long = Long.MaxValue
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // Only integral literals translate to frame bounds. Anything else
-    // (a null inside In(...), a non-numeric value) is NOT accepted —
-    // it stays in the returned residual and Spark evaluates it
-    // post-scan, instead of crashing planning on a cast.
-    def asLOpt(v: Any): Option[Long] = v match {
-      case l: Long => Some(l); case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong); case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def asL(v: Any): Long = asLOpt(v).get
-    val (accepted, rest) = filters.partition {
-      case EqualTo("frame", v) => asLOpt(v).isDefined
-      case In("frame", vs) => vs != null && vs.forall(asLOpt(_).isDefined)
-      case GreaterThan("frame", v) => asLOpt(v).isDefined
-      case GreaterThanOrEqual("frame", v) => asLOpt(v).isDefined
-      case LessThan("frame", v) => asLOpt(v).isDefined
-      case LessThanOrEqual("frame", v) => asLOpt(v).isDefined
-      // frame is non-null by construction: accepting the inferred
-      // IsNotNull keeps it out of the residual (a residual blocks
-      // aggregate pushdown and costs a per-row filter for nothing)
-      case IsNotNull("frame") => true
-      case _ => false
-    }
-    def narrow(s: Set[Long]): Unit =
-      frameEq = Some(frameEq.map(_.intersect(s)).getOrElse(s))
-    accepted.foreach {
-      case EqualTo("frame", v) => narrow(Set(asL(v)))
-      case In("frame", vs) => narrow(vs.map(asL).toSet)
-      case GreaterThan("frame", v) => frameLo = math.max(frameLo, asL(v) + 1)
-      case GreaterThanOrEqual("frame", v) => frameLo = math.max(frameLo, asL(v))
-      case LessThan("frame", v) => frameHi = math.min(frameHi, asL(v) - 1)
-      case LessThanOrEqual("frame", v) => frameHi = math.min(frameHi, asL(v))
-      case _ => ()
-    }
-    pushed = accepted
-    rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  // pushed aggregate tags — same contract as the SPE/TIFF sources:
-  // ungrouped COUNT(*) / MIN / MAX(frame) answer from the header walk
-  // alone (partial semantics; Spark final-merges) — a whole-dataset
-  // frame census never seeks into a data block
-  private var aggTags: Option[Seq[String]] = None
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (agg.groupByExpressions.nonEmpty) return false
-    val tags = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some("count")
-      case m: Min if m.column.describe() == "frame" => Some("min_frame")
-      case m: Max if m.column.describe() == "frame" => Some("max_frame")
-      case _ => None
-    }
-    if (tags.exists(_.isEmpty)) return false
-    aggTags = Some(tags.map(_.get))
-    true
-  }
-
-  /** Header-walk planning shared by the row scan and the pushed-
-    * aggregate scan: per file, its frame descriptors filtered to the
-    * pushed frame bounds. */
-  private def plannedEdf(): Seq[(SpecFileMeta, Long, Seq[(EdfSchema.EdfFrame, Int)])] = {
-    val session = SparkSession.active
-    val conf = session.sessionState.newHadoopConf()
-    val files = SpecSchema.expand(paths, conf)
-      .filterNot(m => m.path.endsWith(SpecIndex.SidecarSuffix) ||
-        m.path.endsWith(EdfSchema.SidecarSuffix))
-    // same driver-vs-job split as the SPE header pass
-    val useCache = indexCache
-    val indexes: Map[String, Seq[EdfSchema.EdfFrame]] =
-      if (files.size <= SpeSchema.ParallelHeaderThreshold)
-        files.map(m => m.path -> EdfSchema.indexWithCache(m, conf, useCache)).toMap
-      else {
-        val sconf = new SerializableHadoopConf(conf)
-        session.sparkContext
-          .parallelize(files, files.size)
-          .map(m => m.path -> EdfSchema.indexWithCache(m, sconf.value, useCache))
-          .collect().toMap
-      }
-    files.map { meta =>
-      val all = indexes(meta.path)
-      val wanted = all.zipWithIndex.filter { case (_, f) =>
-        f >= frameLo && f <= frameHi && frameEq.forall(_.contains(f.toLong))
-      }
-      (meta, all.size.toLong, wanted)
-    }
-  }
-
-  override def build(): Scan = aggTags match {
-    case Some(tags) => new TiffAggScan(tags, () =>
-      plannedEdf().map { case (meta, n, wanted) =>
-        (meta.path, n,
-          wanted.map { case (_, idx) => (null.asInstanceOf[TiffSchema.TiffFrame], idx) })
-      })
-    case None => rowScan()
-  }
-
-  private def rowScan(): Scan = new Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-
-    override def planInputPartitions(): Array[InputPartition] = {
-      plannedEdf().flatMap { case (meta, n, wanted) =>
-        // contiguous runs capped by data bytes per partition
-        val parts = mutable.ArrayBuffer[EdfInputPartition]()
-        val run = mutable.ArrayBuffer[(EdfSchema.EdfFrame, Int)]()
-        var runBytes = 0L
-        def flush(): Unit = if (run.nonEmpty) {
-          parts += EdfInputPartition(meta.path, run.head._2.toLong, n, run.map(_._1).toSeq)
-          run.clear(); runBytes = 0L
-        }
-        wanted.foreach { case (fr, idx) =>
-          val contiguous = run.nonEmpty && run.last._2 + 1 == idx
-          if ((!contiguous && run.nonEmpty) || runBytes + fr.size > maxPartBytes) flush()
-          run += ((fr, idx)); runBytes += fr.size
-        }
-        flush()
-        parts
-      }.toArray
-    }
-
-    override def createReaderFactory(): PartitionReaderFactory =
-      new EdfReaderFactory(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
-
-    override def toMicroBatchStream(checkpointLocation: String):
-        org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new EdfMicroBatchStream(paths,
-        new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-        required.fieldNames, maxPartBytes)
+  override def tail(meta: SpecFileMeta, conf: Configuration,
+                    prev: Option[FrameStack]): FrameStack = {
+    val have = prev.collect { case s: FrameSeq => s.frames }.getOrElse(Vector.empty)
+    val resume = have.lastOption.collect { case f: EdfSchema.EdfFrame => f.dataOffset + f.size }
+    FrameSeq.live(have)(EdfSchema.walk(meta.path, conf, resume.getOrElse(0L), _))
   }
 }
 
-/** Structured-Streaming source over LIVE EDF stacks — watch an
-  * acquisition appending image blocks. The per-file offset is the
-  * number of COMPLETE blocks on disk; a block whose header or data
-  * is still being written is below the floor and waits. Headers are
-  * walked INCREMENTALLY: each file caches (descriptors, resume byte
-  * position), so a trigger re-reads only bytes appended since the
-  * last one — never old headers, never any data. New files under the
-  * path are picked up automatically; partitions and readers are the
-  * batch ones. Append-only assumption (same as every file-tailing
-  * source here): a file that SHRINKS mid-stream invalidates its
-  * cached offsets — restart the query for a rewritten corpus.
-  * Driver memory is O(total frames tracked) across the stream's
-  * lifetime (~48 B per frame descriptor — a million-frame campaign
-  * holds ~50 MB); point long-running streams at the live directory,
-  * not an ever-growing archive.
-  */
-class EdfMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
-                          columns: Array[String], maxPartBytes: Long)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  // path -> (complete-frame descriptors so far, resume byte position,
-  //          file length at last walk). A trigger where the length is
-  //          unchanged skips the walk entirely — no file open, no
-  //          reads — so an idle stream costs one listStatus per
-  //          trigger, nothing per file.
-  private val cache =
-    mutable.Map[String, (Vector[EdfSchema.EdfFrame], Long, Long)]()
-
-  private def refresh(path: String, len: Long): Vector[EdfSchema.EdfFrame] = {
-    val (have, from, lastLen) =
-      cache.getOrElse(path, (Vector.empty[EdfSchema.EdfFrame], 0L, -1L))
-    if (len == lastLen) have
-    else {
-      val (fresh, end) = EdfSchema.walk(path, conf.value, from, lenient = true)
-      val all = have ++ fresh
-      cache(path) = (all, end, len)
-      all
-    }
-  }
-
-  override def initialOffset(): Offset = SpecStreamOffset(Map.empty)
-  override def deserializeOffset(json: String): Offset = SpecStreamOffset.fromJson(json)
-
-  override def latestOffset(): Offset = {
-    val files = SpecSchema.expand(paths, conf.value)
-      .filter(_.len >= EdfSchema.HeaderChunk)
-    SpecStreamOffset(files.map(m => m.path -> refresh(m.path, m.len).size.toLong).toMap)
-  }
-
-  // `n_frames` in streamed rows = the batch's END OFFSET, i.e. frames
-  // discovered in the file SO FAR — not the finished file's total,
-  // which a live tail cannot know. The batch-end value (rather than
-  // the cache's current count) keeps replays deterministic: a
-  // checkpoint-recovered batch reports the same n_frames it first
-  // did. Only a batch re-read of the completed file reports the
-  // final total.
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SpecStreamOffset].files
-    val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
-      val from = s.getOrElse(path, 0L)
-      if (to <= from) Seq.empty
-      else {
-        // normally latestOffset just refreshed; after a checkpoint
-        // restart the cache is cold and the walk reruns here
-        val cached = cache.get(path).map(_._1).getOrElse(Vector.empty)
-        val all =
-          if (cached.size >= to) cached
-          else {
-            val p = new Path(path)
-            refresh(path, p.getFileSystem(conf.value).getFileStatus(p).getLen)
-          }
-        val wanted = all.slice(from.toInt, to.toInt)
-        val parts = mutable.ArrayBuffer[EdfInputPartition]()
-        var runStart = from
-        val run = mutable.ArrayBuffer[EdfSchema.EdfFrame]()
-        var runBytes = 0L
-        def flush(): Unit = if (run.nonEmpty) {
-          parts += EdfInputPartition(path, runStart, to, run.toSeq)
-          runStart += run.size; run.clear(); runBytes = 0L
-        }
-        wanted.foreach { fr =>
-          if (runBytes + fr.size > maxPartBytes) flush()
-          run += fr; runBytes += fr.size
-        }
-        flush()
-        parts
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new EdfReaderFactory(conf, columns)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class EdfReaderFactory(conf: SerializableHadoopConf,
-                       columns: Array[String]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new EdfPartitionReader(partition.asInstanceOf[EdfInputPartition], conf.value, columns)
-}
-
-/** Reads one partition's frames: seek to each block's data offset,
-  * one bounded read per frame. With `pixels` pruned the file is never
-  * opened — rows come from the planned descriptors alone.
-  */
-class EdfPartitionReader(part: EdfInputPartition, conf: Configuration,
-                         columns: Array[String]) extends PartitionReader[InternalRow] {
-  private val needPixels = columns.contains("pixels")
-  private val fileUtf8 = UTF8String.fromString(part.path)
-  private var i = -1
-  private val in = if (needPixels) {
-    val p = new Path(part.path)
-    p.getFileSystem(conf).open(p)
-  } else null
-  private var pixels: GenericArrayData = null
-
-  override def next(): Boolean = {
-    i += 1
-    val more = i < part.frames.size
-    if (more && needPixels) pixels = decode(part.frames(i))
-    more
-  }
-
-  private def decode(fr: EdfSchema.EdfFrame): GenericArrayData = {
-    val buf = new Array[Byte](fr.size.toInt)
-    in.readFully(fr.dataOffset, buf)
-    val bb = ByteBuffer.wrap(buf)
-      .order(if (fr.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
-    val n = fr.width * fr.height
-    val out = new Array[Double](n)
-    fr.dataType match {
-      case "UnsignedByte" => var j = 0; while (j < n) { out(j) = (buf(j) & 0xFF).toDouble; j += 1 }
-      case "SignedByte" => var j = 0; while (j < n) { out(j) = buf(j).toDouble; j += 1 }
-      case "UnsignedShort" => val tb = bb.asShortBuffer; var j = 0; while (j < n) { out(j) = (tb.get(j) & 0xFFFF).toDouble; j += 1 }
-      case "SignedShort" => val tb = bb.asShortBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case "UnsignedInteger" | "UnsignedLong" => val tb = bb.asIntBuffer; var j = 0; while (j < n) { out(j) = (tb.get(j).toLong & 0xFFFFFFFFL).toDouble; j += 1 }
-      case "SignedInteger" | "SignedLong" => val tb = bb.asIntBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case "FloatValue" | "Float" => val tb = bb.asFloatBuffer; var j = 0; while (j < n) { out(j) = tb.get(j).toDouble; j += 1 }
-      case "DoubleValue" => val tb = bb.asDoubleBuffer; var j = 0; while (j < n) { out(j) = tb.get(j); j += 1 }
-    }
-    new GenericArrayData(out)
-  }
-
-  override def get(): InternalRow = {
-    val fr = part.frames(i)
-    val vals: Array[Any] = columns.map {
-      case "file" => fileUtf8
-      case "frame" => part.frameStart + i
-      case "width" => fr.width
-      case "height" => fr.height
-      case "n_frames" => part.nFrames
-      case "datatype" => UTF8String.fromString(fr.dataType)
-      case "byte_order" => UTF8String.fromString(
-        if (fr.littleEndian) "LowByteFirst" else "HighByteFirst")
-      case "pixels" => pixels
-    }
-    InternalRow.fromSeq(vals.toSeq)
-  }
-
-  override def close(): Unit = if (in != null) in.close()
-}
+class EdfScanBuilder(paths: Seq[String], maxPartBytes: Long, indexCache: Boolean = true)
+    extends FrameScanBuilder(EdfFormat(indexCache), paths, maxPartBytes)

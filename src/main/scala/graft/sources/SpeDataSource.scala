@@ -2,22 +2,10 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 reader for Princeton Instruments WinView/WinSpec
   * `.SPE` CCD image files — the detector-file capability of the
@@ -35,49 +23,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *   offset 4100  data     frames consecutive, row-major,
   *                         little-endian
   *
-  * Cluster model: all IO goes through Hadoop `FileSystem`. Planning
-  * reads ONLY each file's 4100-byte header (one bounded pread per
-  * file — no data bytes); partitions cover CONTIGUOUS frame ranges
-  * capped at `maxPartitionBytes` (default 128 MiB), so a
-  * million-frame ROI file doesn't explode into a million tasks while
-  * full-chip frames still get one-or-few frames per task. Each
-  * partition reader `seek`s straight to `4100 + frame·frameBytes`
-  * and reads exactly its own frames: total read work is O(selected
-  * bytes).
-  *
-  * pyspec's per-frame random access (`getData(frame)`) maps onto
-  * partition pruning: equality/range/IN filters on `frame` drop
-  * whole partitions before any data byte is read. Column pruning is
-  * honoured too — a metadata-only query (no `pixels` column) never
-  * touches the data section at all.
+  * Every frame has the same size, so a file's frames are arithmetic
+  * on its header ([[SpeStack]]): planning reads one 4100-byte header
+  * per file and builds no per-frame list, so a million-frame ROI file
+  * plans in O(partitions). Planning, pushdown, partitioning, the live
+  * tail and the reader are the shared [[FrameSource]] ones.
   *
   * Schema (one row per frame):
   *   file string, frame long, width int, height int, n_frames long,
   *   exp_sec double, datatype string, pixels array<double>
-  * (`pixels` is row-major, length width·height; every SPE pixel type
-  * — u8/i16/u16/i32/u32/f32/f64 — is exactly representable in
-  * double.)
+  * (`n_frames` is the header's `NumFrames`, in batch and in stream.)
   */
-class SpeDataSource extends TableProvider with DataSourceRegister {
+class SpeDataSource extends FrameSource {
   override def shortName(): String = "spe"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = SpeSchema.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val paths = Option(properties.get("paths"))
-      .map(p => SpecSchema.parseJsonPaths(p))
-      .orElse(Option(properties.get("path")).map(Seq(_)))
-      .getOrElse(throw new IllegalArgumentException("spe reader needs a path"))
-    new SpeTable(paths, Option(properties.get("maxPartitionBytes"))
-      .map(_.toLong).getOrElse(SpeSchema.DefaultMaxPartitionBytes))
-  }
+  override protected def format(options: util.Map[String, String]): FrameFormat = SpeFormat
 }
 
 object SpeSchema {
   val HeaderBytes = 4100
-  val DefaultMaxPartitionBytes: Long = 128L * 1024 * 1024
-  /** Files-per-read above which header preads run as a Spark job
-    * (one task per file) instead of inline on the driver. */
-  val ParallelHeaderThreshold = 16
+  val DefaultMaxPartitionBytes: Long = FrameSource.DefaultMaxPartitionBytes
+  val ParallelHeaderThreshold: Int = FrameSource.ParallelHeaderThreshold
 
   val schema: StructType = StructType(Seq(
     StructField("file", StringType),
@@ -91,16 +56,17 @@ object SpeSchema {
 
   final case class SpeHeader(width: Int, height: Int, datatype: Int,
                              nFrames: Int, expSec: Double) {
-    def bytesPerPixel: Int = datatype match {
-      case 0 => 4 // float32
-      case 1 => 4 // int32
-      case 2 => 2 // int16
-      case 3 => 2 // uint16
-      case 5 => 8 // float64
-      case 6 => 1 // uint8
-      case 8 => 4 // uint32
+    def sample: SampleKind = datatype match {
+      case 0 => SampleKind.F32
+      case 1 => SampleKind.I32
+      case 2 => SampleKind.I16
+      case 3 => SampleKind.U16
+      case 5 => SampleKind.F64
+      case 6 => SampleKind.U8
+      case 8 => SampleKind.U32
       case d => throw new IllegalArgumentException(s"unsupported SPE datatype $d")
     }
+    def bytesPerPixel: Int = sample.bytes
     def datatypeName: String = datatype match {
       case 0 => "float32"
       case 1 => "int32"
@@ -145,295 +111,55 @@ object SpeSchema {
   }
 }
 
-final case class SpeInputPartition(path: String, frameStart: Long, frameEnd: Long,
-                                   header: SpeSchema.SpeHeader) extends InputPartition
-
-class SpeTable(paths: Seq[String], maxPartBytes: Long) extends Table with SupportsRead {
-  override def name(): String = s"spe(${paths.mkString(",")})"
-  override def schema(): StructType = SpeSchema.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SpeScanBuilder(paths, maxPartBytes)
+/** Frame `index` of an SPE file. */
+final case class SpeFrame(h: SpeSchema.SpeHeader, index: Long) extends FrameDesc {
+  override def width: Int = h.width
+  override def height: Int = h.height
+  override def sample: SampleKind = h.sample
+  override def littleEndian: Boolean = true
+  override def dataBytes: Long = h.frameBytes
+  override def dataRanges: Seq[(Long, Long)] =
+    Seq((SpeSchema.HeaderBytes + index * h.frameBytes, h.frameBytes))
+  override def datatypeName: String = h.datatypeName
+  override def column(name: String): Any = name match { case "exp_sec" => h.expSec }
 }
 
-class SpeScanBuilder(paths: Seq[String], maxPartBytes: Long)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = SpeSchema.schema
-  private var frameEq: Option[Set[Long]] = None
-  private var frameLo: Long = Long.MinValue
-  private var frameHi: Long = Long.MaxValue
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // integral literals only; anything else stays residual (the EDF
-    // planning-robustness contract)
-    def asLOpt(v: Any): Option[Long] = v match {
-      case l: Long => Some(l); case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong); case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-    def asL(v: Any): Long = asLOpt(v).get
-    val (accepted, rest) = filters.partition {
-      case EqualTo("frame", v) => asLOpt(v).isDefined
-      case In("frame", vs) => vs != null && vs.forall(asLOpt(_).isDefined)
-      case GreaterThan("frame", v) => asLOpt(v).isDefined
-      case GreaterThanOrEqual("frame", v) => asLOpt(v).isDefined
-      case LessThan("frame", v) => asLOpt(v).isDefined
-      case LessThanOrEqual("frame", v) => asLOpt(v).isDefined
-      // frame is non-null by construction: accepting the inferred
-      // IsNotNull keeps it out of the residual
-      case IsNotNull("frame") => true
-      case _ => false
-    }
-    def narrow(s: Set[Long]): Unit =
-      frameEq = Some(frameEq.map(_.intersect(s)).getOrElse(s))
-    accepted.foreach {
-      case EqualTo("frame", v) => narrow(Set(asL(v)))
-      case In("frame", vs) => narrow(vs.map(asL).toSet)
-      case GreaterThan("frame", v) => frameLo = math.max(frameLo, asL(v) + 1)
-      case GreaterThanOrEqual("frame", v) => frameLo = math.max(frameLo, asL(v))
-      case LessThan("frame", v) => frameHi = math.min(frameHi, asL(v) - 1)
-      case LessThanOrEqual("frame", v) => frameHi = math.min(frameHi, asL(v))
-      case _ => ()
-    }
-    pushed = accepted
-    // Spark re-evaluates the filters on returned rows anyway; keeping
-    // them non-residual would be fine too, but report accurately.
-    rest
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  // pushed aggregate tags — same contract as the TIFF source:
-  // ungrouped COUNT(*) / MIN / MAX(frame) answer from the 4100-byte
-  // header pass alone (partial semantics; Spark final-merges)
-  private var aggTags: Option[Seq[String]] = None
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (agg.groupByExpressions.nonEmpty) return false
-    val tags = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some("count")
-      case m: Min if m.column.describe() == "frame" => Some("min_frame")
-      case m: Max if m.column.describe() == "frame" => Some("max_frame")
-      case _ => None
-    }
-    if (tags.exists(_.isEmpty)) return false
-    aggTags = Some(tags.map(_.get))
-    true
-  }
-
-  override def build(): Scan = aggTags match {
-    case Some(tags) => new TiffAggScan(tags, () => {
-      val conf = SparkSession.active.sessionState.newHadoopConf()
-      SpecSchema.expand(paths, conf)
-        .filterNot(_.path.endsWith(SpecIndex.SidecarSuffix))
-        .map { meta =>
-          val h = SpeSchema.readHeader(meta.path, conf)
-          val wanted = (0 until h.nFrames).filter { f =>
-            f >= frameLo && f <= frameHi && frameEq.forall(_.contains(f.toLong))
-          }.map(f => (null.asInstanceOf[TiffSchema.TiffFrame], f))
-          (meta.path, h.nFrames.toLong, wanted)
-        }
-    })
-    case None => rowScan()
-  }
-
-  private def rowScan(): Scan = new Scan with Batch {
-    override def readSchema(): StructType = required
-    override def toBatch: Batch = this
-
-    override def planInputPartitions(): Array[InputPartition] = {
-      val session = SparkSession.active
-      val conf = session.sessionState.newHadoopConf()
-      val files = SpecSchema.expand(paths, conf)
-        .filterNot(_.path.endsWith(SpecIndex.SidecarSuffix))
-      // few files: header preads inline on the driver (4100 B each).
-      // Many files: one Spark job, one task per file — the same
-      // pattern as the spec source's distributed index pass, so a
-      // 10k-stack corpus never serializes its header reads through
-      // the driver.
-      val headers: Map[String, SpeSchema.SpeHeader] =
-        if (files.size <= SpeSchema.ParallelHeaderThreshold)
-          files.map(m => m.path -> SpeSchema.readHeader(m.path, conf)).toMap
-        else {
-          val sconf = new SerializableHadoopConf(conf)
-          session.sparkContext
-            .parallelize(files.map(_.path), files.size)
-            .map(p => p -> SpeSchema.readHeader(p, sconf.value))
-            .collect().toMap
-        }
-      files.flatMap { meta =>
-        val h = headers(meta.path)
-        val wanted = (0L until h.nFrames.toLong).filter { f =>
-          f >= frameLo && f <= frameHi && frameEq.forall(_.contains(f))
-        }
-        // contiguous runs, each capped at maxPartBytes
-        val framesPerPart = math.max(1L, maxPartBytes / math.max(1L, h.frameBytes))
-        val parts = mutable.ArrayBuffer[SpeInputPartition]()
-        var runStart = -1L
-        var prev = -2L
-        def flush(endIncl: Long): Unit = if (runStart >= 0) {
-          var s = runStart
-          while (s <= endIncl) {
-            val e = math.min(endIncl, s + framesPerPart - 1)
-            parts += SpeInputPartition(meta.path, s, e, h)
-            s = e + 1
-          }
-        }
-        wanted.foreach { f =>
-          if (f != prev + 1) { flush(prev); runStart = f }
-          prev = f
-        }
-        flush(prev)
-        parts
-      }.toArray
-    }
-
-    override def createReaderFactory(): PartitionReaderFactory =
-      new SpeReaderFactory(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
-
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new SpeMicroBatchStream(paths,
-        new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-        required.fieldNames, maxPartBytes)
+/** Frames [first, first + size) of an SPE file. */
+final case class SpeStack(h: SpeSchema.SpeHeader, first: Long, size: Long) extends FrameStack {
+  override def apply(i: Long): FrameDesc = SpeFrame(h, first + i)
+  override def slice(from: Long, until: Long): FrameStack = SpeStack(h, first + from, until - from)
+  override def nFramesAt(end: Long): Long = h.nFrames.toLong
+  // the greedy default's partitions, computed without visiting each
+  // frame: planning stays O(partitions)
+  override def runEnd(start: Long, last: Long, cap: Long): Long = {
+    val perPart = math.max(1L, cap / h.frameBytes)
+    if (last - start < perPart) last else start + perPart - 1
   }
 }
 
-/** Structured-Streaming source over LIVE SPE stacks — watch a
-  * detector acquisition as frames append. Acquisition software writes
-  * the 4100-byte header first (dims, datatype; `NumFrames` may hold
-  * the final planned count from the start), then appends frames, so
-  * the number of COMPLETE frames on disk is
-  * `(len − 4100) div frameBytes` — the stream's per-file offset.
-  * Each micro-batch emits exactly the frames completed since the last
-  * offset (a partially-written trailing frame is below the floor and
-  * waits for its remaining bytes); when the header's `NumFrames` is
-  * positive it caps the emitted count, so a file whose data section
-  * carries trailing garbage (e.g. a footer) never yields phantom
-  * frames. Headers are read once per file and cached for the stream's
-  * lifetime; new files under the path are picked up automatically.
-  * Partitions and readers are the batch ones — seek + bounded
-  * per-frame reads, contiguous ranges capped at `maxPartitionBytes`.
-  */
-class SpeMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
-                          columns: Array[String], maxPartBytes: Long)
-    extends MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+object SpeFormat extends FrameFormat {
+  override def schema: StructType = SpeSchema.schema
 
-  private val headerCache = mutable.Map[String, SpeSchema.SpeHeader]()
-  private def header(path: String): SpeSchema.SpeHeader =
-    headerCache.getOrElseUpdate(path, SpeSchema.readHeader(path, conf.value, strict = false))
-
-  override def initialOffset(): Offset = SpecStreamOffset(Map.empty)
-  override def deserializeOffset(json: String): Offset = SpecStreamOffset.fromJson(json)
-
-  override def latestOffset(): Offset = {
-    val files = SpecSchema.expand(paths, conf.value)
-      .filter(_.len >= SpeSchema.HeaderBytes)
-    SpecStreamOffset(files.map { meta =>
-      val h = header(meta.path)
-      val onDisk =
-        if (h.frameBytes <= 0) 0L
-        else (meta.len - SpeSchema.HeaderBytes) / h.frameBytes
-      val avail = if (h.nFrames > 0) math.min(onDisk, h.nFrames.toLong) else onDisk
-      meta.path -> avail
-    }.toMap)
+  override def index(meta: SpecFileMeta, conf: Configuration): FrameStack = {
+    val h = SpeSchema.readHeader(meta.path, conf)
+    SpeStack(h, 0L, h.nFrames.toLong)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SpecStreamOffset].files
-    val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
-      val from = s.getOrElse(path, 0L)
-      if (to <= from) Seq.empty
-      else {
-        val h = header(path)
-        val framesPerPart = math.max(1L, maxPartBytes / math.max(1L, h.frameBytes))
-        (from until to by framesPerPart).map { p =>
-          SpeInputPartition(path, p, math.min(to - 1, p + framesPerPart - 1), h)
-        }
+  /** Acquisition software writes the header first (`NumFrames` may
+    * hold the final planned count from the start), then appends
+    * frames, so the complete frames on disk are
+    * `(len − 4100) div frameBytes`. A positive `NumFrames` caps that
+    * count, so trailing bytes past the data (a footer) never become
+    * phantom frames. The header is read once per file. */
+  override def tail(meta: SpecFileMeta, conf: Configuration,
+                    prev: Option[FrameStack]): FrameStack =
+    if (meta.len < SpeSchema.HeaderBytes) FrameSeq.empty
+    else {
+      val h = prev match {
+        case Some(s: SpeStack) => s.h
+        case _ => SpeSchema.readHeader(meta.path, conf, strict = false)
       }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SpeReaderFactory(conf, columns)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-class SpeReaderFactory(conf: SerializableHadoopConf,
-                       columns: Array[String]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SpePartitionReader(partition.asInstanceOf[SpeInputPartition], conf.value, columns)
-}
-
-/** Reads frames [frameStart, frameEnd] of one file: a single seek to
-  * the range start, then one bounded sequential read per frame. When
-  * `pixels` is pruned away the data section is never read — the row
-  * is synthesized from the header alone.
-  */
-class SpePartitionReader(part: SpeInputPartition, conf: Configuration,
-                         columns: Array[String]) extends PartitionReader[InternalRow] {
-  private val h = part.header
-  private val needPixels = columns.contains("pixels")
-  private val fileUtf8 = UTF8String.fromString(part.path)
-  private val dtypeUtf8 = UTF8String.fromString(h.datatypeName)
-  private var cur = part.frameStart - 1
-  private val in = if (needPixels) {
-    val p = new Path(part.path)
-    val s = p.getFileSystem(conf).open(p)
-    s.seek(SpeSchema.HeaderBytes + part.frameStart * h.frameBytes)
-    s
-  } else null
-  private val buf = if (needPixels) new Array[Byte](h.frameBytes.toInt) else null
-  private var pixels: GenericArrayData = null
-
-  override def next(): Boolean = {
-    cur += 1
-    val more = cur <= part.frameEnd
-    // decode in next(), not get(): the stream advances exactly once
-    // per row regardless of how often Spark materializes it
-    if (more && needPixels) pixels = decode()
-    more
-  }
-
-  private def decode(): GenericArrayData = {
-    in.readFully(buf, 0, buf.length)
-    val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-    val n = h.width * h.height
-    val out = new Array[Double](n)
-    h.datatype match {
-      case 0 => val tb = bb.asFloatBuffer; var i = 0; while (i < n) { out(i) = tb.get(i).toDouble; i += 1 }
-      case 1 => val tb = bb.asIntBuffer; var i = 0; while (i < n) { out(i) = tb.get(i).toDouble; i += 1 }
-      case 2 => val tb = bb.asShortBuffer; var i = 0; while (i < n) { out(i) = tb.get(i).toDouble; i += 1 }
-      case 3 => val tb = bb.asShortBuffer; var i = 0; while (i < n) { out(i) = (tb.get(i) & 0xFFFF).toDouble; i += 1 }
-      case 5 => val tb = bb.asDoubleBuffer; var i = 0; while (i < n) { out(i) = tb.get(i); i += 1 }
-      case 6 => var i = 0; while (i < n) { out(i) = (buf(i) & 0xFF).toDouble; i += 1 }
-      case 8 => val tb = bb.asIntBuffer; var i = 0; while (i < n) { out(i) = (tb.get(i).toLong & 0xFFFFFFFFL).toDouble; i += 1 }
+      val onDisk = (meta.len - SpeSchema.HeaderBytes) / h.frameBytes
+      SpeStack(h, 0L, if (h.nFrames > 0) math.min(onDisk, h.nFrames.toLong) else onDisk)
     }
-    new GenericArrayData(out)
-  }
-
-  override def get(): InternalRow = {
-    val vals: Array[Any] = columns.map {
-      case "file" => fileUtf8
-      case "frame" => cur
-      case "width" => h.width
-      case "height" => h.height
-      case "n_frames" => h.nFrames.toLong
-      case "exp_sec" => h.expSec
-      case "datatype" => dtypeUtf8
-      case "pixels" => pixels
-    }
-    InternalRow.fromSeq(vals.toSeq)
-  }
-
-  override def close(): Unit = if (in != null) in.close()
 }

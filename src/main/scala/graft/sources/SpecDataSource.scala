@@ -596,24 +596,16 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
   // every filter residual, so the agg path serves the unfiltered
   // corpus-audit queries ("how many points / which scan range").
   private var aggTags: Option[Seq[String]] = None
-  import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    if (agg.groupByExpressions.nonEmpty) return false
-    val tags = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some("count")
-      case m: Min if m.column.describe() == "scan" => Some("min_scan")
-      case m: Max if m.column.describe() == "scan" => Some("max_scan")
-      case _ => None
-    }
-    if (tags.exists(_.isEmpty)) return false
-    aggTags = Some(tags.map(_.get))
-    true
+  override def pushAggregation(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+    aggTags = IndexAggScan.tags(agg, "scan")
+    aggTags.isDefined
   }
 
   override def build(): Scan = aggTags match {
-    case Some(tags) => new SpecAggScan(tags,
+    case Some(tags) => new IndexAggScan(tags,
       () => computeIndexes().flatMap(idx =>
-        wantedOf(idx).map { case ((no, _, _), np) => (no, np) }))
+        wantedOf(idx).map { case ((no, _, _), np) => (no, no, np) }))
     case None => rowScan()
   }
 
@@ -635,41 +627,6 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
         new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
         required.fieldNames, emitLast)
   }
-}
-
-final case class SpecAggPartition(values: Array[Any]) extends InputPartition
-
-/** Index-only aggregate scan: one partial row computed entirely from
-  * the (sidecar-cached) scan index — COUNT(*) sums the per-scan point
-  * counts, MIN/MAX(scan) read the scan numbers; no data bytes are
-  * ever streamed. Mirrors the SPE/TIFF agg-scan contract.
-  */
-class SpecAggScan(tags: Seq[String], planned: () => Seq[(Long, Long)])
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(tags.map(t => StructField(s"agg_$t", LongType, nullable = t != "count")))
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val scans = planned() // one (scanNo, nPoints) per wanted scan block
-    val values: Array[Any] = tags.map {
-      case "count" => scans.map(_._2).sum
-      case "min_scan" => if (scans.isEmpty) null else scans.map(_._1).min
-      case "max_scan" => if (scans.isEmpty) null else scans.map(_._1).max
-    }.toArray
-    Array(SpecAggPartition(values))
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private var emitted = false
-          private val row = InternalRow.fromSeq(
-            p.asInstanceOf[SpecAggPartition].values.toSeq)
-          override def next(): Boolean = { val r = !emitted; emitted = true; r }
-          override def get(): InternalRow = row
-          override def close(): Unit = ()
-        }
-    }
 }
 
 /** Per-file committed byte positions — the stream's offset. */

@@ -239,4 +239,19 @@ class EdfDataSourceSpec extends SparkSpec {
     // row path unaffected for non-pushable shapes
     assert(df.groupBy(col("datatype")).count().collect()(0).getLong(1) == 9L)
   }
+
+  test("many files plan via the distributed header-read job") {
+    val dir = java.nio.file.Files.createTempDirectory("edfpar").toFile
+    val n = graft.sources.SpeSchema.ParallelHeaderThreshold + 4
+    for (k <- 1 to n)
+      EdfWriterUtil.write(new java.io.File(dir, f"s$k%03d.edf").getAbsolutePath, conf, 2, 1,
+        "UnsignedShort", true, Seq(Array(k.toDouble, 0.0), Array(k.toDouble, 1.0)))
+    val df = spark.read.format("edf").load(dir.getAbsolutePath)
+    assert(df.select("file", "frame").collect().length == 2 * n)
+    val sums = df.select(sum(element_at(col("pixels"), 1))).collect().head.getDouble(0)
+    assert(sums == 2.0 * (1 to n).sum)
+    val cq = df.groupBy().count()
+    assert(cq.queryExecution.executedPlan.toString.contains("agg_count"))
+    assert(cq.collect()(0).getLong(0) == 2L * n)
+  }
 }

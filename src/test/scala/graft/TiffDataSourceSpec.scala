@@ -242,4 +242,19 @@ class TiffDataSourceSpec extends SparkSpec {
       assert(spark.table("tiff_sb").collect().map(key).toSet === batch)
     } finally q.stop()
   }
+
+  test("many files plan via the distributed header-read job") {
+    val dir = java.nio.file.Files.createTempDirectory("tiffpar").toFile
+    val n = graft.sources.SpeSchema.ParallelHeaderThreshold + 4
+    for (k <- 1 to n)
+      TiffWriterUtil.write(new java.io.File(dir, f"s$k%03d.tiff").getAbsolutePath, conf, 2, 1,
+        "uint16", true, Seq(Array(k.toDouble, 0.0), Array(k.toDouble, 1.0)))
+    val df = spark.read.format("tiff").load(dir.getAbsolutePath)
+    assert(df.select("file", "frame").collect().length == 2 * n)
+    val sums = df.select(sum(element_at(col("pixels"), 1))).collect().head.getDouble(0)
+    assert(sums == 2.0 * (1 to n).sum)
+    val cq = df.groupBy().count()
+    assert(cq.queryExecution.executedPlan.toString.contains("agg_count"))
+    assert(cq.collect()(0).getLong(0) == 2L * n)
+  }
 }
