@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 import scala.collection.mutable
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
@@ -28,23 +29,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - `path`/`paths` and `maxPartitionBytes` (default 128 MiB)
   *     option parsing;
-  *   - `frame` filter pushdown: equality/range/IN prune whole
-  *     partitions before any data byte is read;
+  *   - `frame` filter pushdown ([[FrameFilter]]): equality/range/IN
+  *     prune whole partitions before any data byte is read;
   *   - ungrouped COUNT(*) / MIN / MAX(frame) pushdown to a one-row
   *     index scan ([[IndexAggScan]]) — a frame census reads headers only;
-  *   - the header pass: inline on the driver for a few files, one Spark
-  *     task per file above [[FrameSource.ParallelHeaderThreshold]], so
-  *     a 10k-stack corpus never serializes its header reads through the
-  *     driver;
+  *   - the header pass ([[FrameSource.headerPass]]);
   *   - partitions: contiguous frame runs capped at `maxPartitionBytes`
   *     (one frame at least), in batch and in stream alike;
-  *   - the live micro-batch tail ([[FrameMicroBatchStream]]);
+  *   - the live micro-batch tail ([[LiveMicroBatchStream]] over a
+  *     [[FrameTail]]);
   *   - one partition reader and pixel decoder. A projection without
   *     `pixels` never opens a data file: rows come from the planned
   *     descriptors alone.
   *
   * Planning reads headers only; all IO goes through Hadoop
-  * `FileSystem`, so `file:`/`hdfs:`/`s3a:` URIs all work.
+  * `FileSystem`, so `file:`/`hdfs:`/`s3a:` URIs all work. The `spec`
+  * source shares the option parsing, the key-column pushdown, the
+  * header pass, the aggregate scan and the live stream.
   */
 abstract class FrameSource extends TableProvider with DataSourceRegister {
   protected def format(options: util.Map[String, String]): FrameFormat
@@ -52,10 +53,8 @@ abstract class FrameSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = format(options).schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    val paths = Option(properties.get("paths"))
-      .map(p => SpecSchema.parseJsonPaths(p))
-      .orElse(Option(properties.get("path")).map(Seq(_)))
-      .getOrElse(throw new IllegalArgumentException(s"${shortName()} reader needs a path"))
+    val paths = FrameSource.paths(properties)
+    require(paths.nonEmpty, s"${shortName()} reader needs a path")
     new FrameTable(shortName(), format(properties), paths,
       Option(properties.get("maxPartitionBytes")).map(_.toLong)
         .getOrElse(FrameSource.DefaultMaxPartitionBytes))
@@ -64,9 +63,37 @@ abstract class FrameSource extends TableProvider with DataSourceRegister {
 
 object FrameSource {
   val DefaultMaxPartitionBytes: Long = 128L * 1024 * 1024
-  /** Files-per-read above which header reads run as a Spark job (one
-    * task per file) instead of inline on the driver. */
-  val ParallelHeaderThreshold = 16
+  /** Files-per-read above which the header pass runs as a Spark job
+    * (one task per file) instead of inline on the driver — the idea of
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`. Small,
+    * because the SPEC index pass reads whole files. */
+  val ParallelHeaderThreshold = 4
+
+  /** The `paths` option (a JSON string array, written by
+    * `DataFrameReader.load(paths*)`; parsed properly so paths holding
+    * commas or quotes survive), else `path`, else none. A `paths` value
+    * that is not a JSON array is taken as one path. */
+  def paths(properties: util.Map[String, String]): Seq[String] =
+    Option(properties.get("paths")).map { json =>
+      scala.util.Try {
+        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+        require(node.isArray)
+        (0 until node.size()).map(i => node.get(i).asText())
+      }.getOrElse(Seq(json))
+    }.orElse(Option(properties.get("path")).map(Seq(_))).getOrElse(Seq.empty)
+
+  /** `read` applied to every file, in file order: inline on the driver
+    * for up to [[ParallelHeaderThreshold]] files, else one Spark task
+    * per file, so a 10k-file corpus never serializes its header reads
+    * through the driver — the driver collects only the results. */
+  def headerPass[T: ClassTag](files: Seq[SpecFileMeta], conf: Configuration)
+                             (read: (SpecFileMeta, Configuration) => T): Seq[T] =
+    if (files.size <= ParallelHeaderThreshold) files.map(read(_, conf))
+    else {
+      val sconf = new SerializableHadoopConf(conf)
+      SparkSession.active.sparkContext.parallelize(files, files.size)
+        .map(read(_, sconf.value)).collect().toSeq
+    }
 
   /** Partitions over `runs` (inclusive frame ranges) of one file: each
     * run is cut into consecutive pieces of as many frames as fit in
@@ -170,26 +197,36 @@ object FrameSeq {
   }
 }
 
-/** Frames selected by the pushed `frame` filters: lo ≤ frame ≤ hi, and
-  * in `eq` when set. */
-final case class FrameFilter(lo: Long = Long.MinValue, hi: Long = Long.MaxValue,
+/** Values of an integral key column (`frame`, SPEC's `scan`) selected
+  * by its pushed filters: lo ≤ key ≤ hi, and in `eq` when set. */
+final case class FrameFilter(key: String, lo: Long = Long.MinValue, hi: Long = Long.MaxValue,
                              eq: Option[Set[Long]] = None) {
+  import FrameFilter.asLong
+
   def and(f: Filter): FrameFilter = {
-    import FrameFilter.asLong
     def in(s: Set[Long]) = copy(eq = Some(eq.map(_.intersect(s)).getOrElse(s)))
+    // a strict bound past the end of Long selects nothing (v ± 1 would
+    // wrap round to the opposite end and select everything)
+    val none = in(Set.empty)
     f match {
       case EqualTo(_, v) => in(Set(asLong(v).get))
       case In(_, vs) => in(vs.map(asLong(_).get).toSet)
-      case GreaterThan(_, v) => copy(lo = math.max(lo, asLong(v).get + 1))
+      case GreaterThan(_, v) =>
+        val l = asLong(v).get
+        if (l == Long.MaxValue) none else copy(lo = math.max(lo, l + 1))
       case GreaterThanOrEqual(_, v) => copy(lo = math.max(lo, asLong(v).get))
-      case LessThan(_, v) => copy(hi = math.min(hi, asLong(v).get - 1))
+      case LessThan(_, v) =>
+        val l = asLong(v).get
+        if (l == Long.MinValue) none else copy(hi = math.min(hi, l - 1))
       case LessThanOrEqual(_, v) => copy(hi = math.min(hi, asLong(v).get))
       case _ => this
     }
   }
 
-  /** The selected frames of a file with `n` frames, as maximal runs of
-    * consecutive frames (first, last). */
+  def contains(v: Long): Boolean = v >= lo && v <= hi && eq.forall(_.contains(v))
+
+  /** The selected values in [0, n), as maximal runs of consecutive
+    * values (first, last). */
   def runs(n: Long): Seq[(Long, Long)] = {
     val a = math.max(lo, 0L)
     val b = math.min(hi, n - 1)
@@ -204,6 +241,25 @@ final case class FrameFilter(lo: Long = Long.MinValue, hi: Long = Long.MaxValue,
         out.toSeq
     }
   }
+
+  /** Only integral literals on `key` translate to bounds. Anything else
+    * (a null inside In(...), a non-numeric value) stays in the residual
+    * and Spark evaluates it post-scan, instead of planning crashing on
+    * a cast. The key is non-null by construction: accepting the
+    * inferred IsNotNull keeps it out of the residual (a residual blocks
+    * aggregate pushdown and costs a per-row filter for nothing). Every
+    * accepted filter is exact — a partition holds whole key values — so
+    * none stays residual. */
+  def accepts(f: Filter): Boolean = f match {
+    case EqualTo(`key`, v) => asLong(v).isDefined
+    case In(`key`, vs) => vs != null && vs.forall(asLong(_).isDefined)
+    case GreaterThan(`key`, v) => asLong(v).isDefined
+    case GreaterThanOrEqual(`key`, v) => asLong(v).isDefined
+    case LessThan(`key`, v) => asLong(v).isDefined
+    case LessThanOrEqual(`key`, v) => asLong(v).isDefined
+    case IsNotNull(`key`) => true
+    case _ => false
+  }
 }
 
 object FrameFilter {
@@ -211,23 +267,6 @@ object FrameFilter {
     case l: Long => Some(l); case i: Int => Some(i.toLong)
     case s: Short => Some(s.toLong); case b: Byte => Some(b.toLong)
     case _ => None
-  }
-
-  /** Only integral literals translate to frame bounds. Anything else (a
-    * null inside In(...), a non-numeric value) stays in the residual
-    * and Spark evaluates it post-scan, instead of planning crashing on
-    * a cast. `frame` is non-null by construction: accepting the inferred
-    * IsNotNull keeps it out of the residual (a residual blocks aggregate
-    * pushdown and costs a per-row filter for nothing). */
-  def accepts(f: Filter): Boolean = f match {
-    case EqualTo("frame", v) => asLong(v).isDefined
-    case In("frame", vs) => vs != null && vs.forall(asLong(_).isDefined)
-    case GreaterThan("frame", v) => asLong(v).isDefined
-    case GreaterThanOrEqual("frame", v) => asLong(v).isDefined
-    case LessThan("frame", v) => asLong(v).isDefined
-    case LessThanOrEqual("frame", v) => asLong(v).isDefined
-    case IsNotNull("frame") => true
-    case _ => false
   }
 }
 
@@ -247,13 +286,13 @@ class FrameScanBuilder(format: FrameFormat, paths: Seq[String], maxPartBytes: Lo
     with SupportsPushDownAggregates {
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = format.schema
-  private var wanted = FrameFilter()
+  private var wanted = FrameFilter("frame")
   private var aggTags: Option[Seq[String]] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, rest) = filters.partition(FrameFilter.accepts)
+    val (accepted, rest) = filters.partition(wanted.accepts)
     wanted = accepted.foldLeft(wanted)(_ and _)
     pushed = accepted
     rest
@@ -267,18 +306,12 @@ class FrameScanBuilder(format: FrameFormat, paths: Seq[String], maxPartBytes: Lo
 
   /** Each file's stack and its selected frame runs. */
   private def planned(): Seq[(String, FrameStack, Seq[(Long, Long)])] = {
-    val session = SparkSession.active
-    val conf = session.sessionState.newHadoopConf()
+    val conf = SparkSession.active.sessionState.newHadoopConf()
     val files = SpecSchema.expand(paths, conf)
-    val stacks =
-      if (files.size <= FrameSource.ParallelHeaderThreshold) files.map(format.index(_, conf))
-      else {
-        val sconf = new SerializableHadoopConf(conf)
-        val fmt = format // the task closure must not capture this builder
-        session.sparkContext.parallelize(files, files.size)
-          .map(fmt.index(_, sconf.value)).collect().toSeq
-      }
-    files.zip(stacks).map { case (meta, stack) => (meta.path, stack, wanted.runs(stack.size)) }
+    val fmt = format // the task closure must not capture this builder
+    files.zip(FrameSource.headerPass(files, conf)(fmt.index)).map { case (meta, stack) =>
+      (meta.path, stack, wanted.runs(stack.size))
+    }
   }
 
   override def build(): Scan = aggTags match {
@@ -299,43 +332,71 @@ class FrameScanBuilder(format: FrameFormat, paths: Seq[String], maxPartBytes: Lo
       }.toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new FrameReaderFactory(hadoopConf(), required.fieldNames)
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new FrameMicroBatchStream(format, paths, hadoopConf(), required.fieldNames, maxPartBytes)
+    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+      val conf = hadoopConf()
+      new LiveMicroBatchStream(new FrameTail(format, maxPartBytes), paths, conf,
+        new FrameReaderFactory(conf, required.fieldNames))
+    }
   }
 }
 
-/** Structured-Streaming source over LIVE detector stacks — watch an
-  * acquisition as frames append. The per-file offset is the number of
-  * COMPLETE frames on disk (the format's [[FrameFormat.tail]]); a frame
-  * still being written waits for a later trigger. Each file's stack is
-  * cached with the file length it was taken at: a trigger where the
-  * length is unchanged skips the format entirely — no file open, no
-  * reads — so an idle stream costs one listStatus per trigger. New
-  * files under the path are picked up automatically; partitions and
-  * readers are the batch ones. Append-only assumption: a file that
-  * SHRINKS mid-stream invalidates its offsets — restart the query for
-  * a rewritten corpus. Driver memory is O(frame descriptors tracked)
-  * over the stream's lifetime; point long-running streams at the live
-  * directory, not an ever-growing archive.
-  */
-class FrameMicroBatchStream(format: FrameFormat, paths: Seq[String],
-                            conf: SerializableHadoopConf, columns: Array[String],
-                            maxPartBytes: Long) extends MicroBatchStream {
-  private val cache = mutable.Map[String, (Long, FrameStack)]()
+/** How a format's LIVE files advance between micro-batches: a per-file
+  * state `S`, its `Long` offset, and the partitions between two offsets. */
+trait LiveTail[S] {
+  /** The file's state now, given its state at the previous refresh
+    * (None the first time, and after a restart). */
+  def advance(meta: SpecFileMeta, conf: Configuration, prev: Option[S]): S
+  /** The file's offset in `state`: what the stream checkpoints. */
+  def offset(state: S): Long
+  /** Partitions for offsets [from, to); `state` is normally at or past
+    * `to` (a file that shrank may leave it short). */
+  def partitions(path: String, state: S, from: Long, to: Long): Seq[InputPartition]
+}
 
-  private def refresh(meta: SpecFileMeta): FrameStack = cache.get(meta.path) match {
-    case Some((len, stack)) if len == meta.len => stack
+/** The detector formats' tail: the offset is the number of COMPLETE
+  * frames on disk (the format's [[FrameFormat.tail]]); a frame still
+  * being written waits for a later trigger. */
+final class FrameTail(format: FrameFormat, maxPartBytes: Long) extends LiveTail[FrameStack] {
+  override def advance(meta: SpecFileMeta, conf: Configuration,
+                       prev: Option[FrameStack]): FrameStack = format.tail(meta, conf, prev)
+  override def offset(stack: FrameStack): Long = stack.size
+  override def partitions(path: String, stack: FrameStack, from: Long,
+                          to: Long): Seq[InputPartition] =
+    FrameSource.partitions(path, stack, Seq((from, math.min(to, stack.size) - 1)),
+      stack.nFramesAt(to), maxPartBytes)
+}
+
+/** Structured-Streaming source over LIVE files — watch an acquisition
+  * as it appends — for every format with a [[LiveTail]]. The offset
+  * (`SpecStreamOffset`) maps each file to its tail offset. Each file's
+  * state is cached with the file length it was taken at: a trigger
+  * where the length is unchanged skips the tail entirely — no file
+  * open, no reads — so an idle stream costs one listStatus per
+  * trigger. New files under the path are picked up automatically;
+  * partitions and readers are the batch ones. Append-only assumption:
+  * a file that SHRINKS mid-stream invalidates its offsets — restart
+  * the query for a rewritten corpus. Driver memory is O(blocks or
+  * frames tracked) over the stream's lifetime; point long-running
+  * streams at the live directory, not an ever-growing archive.
+  */
+class LiveMicroBatchStream[S](tail: LiveTail[S], paths: Seq[String],
+                              conf: SerializableHadoopConf,
+                              readers: PartitionReaderFactory) extends MicroBatchStream {
+  private val cache = mutable.Map[String, (Long, S)]()
+
+  private def refresh(meta: SpecFileMeta): S = cache.get(meta.path) match {
+    case Some((len, state)) if len == meta.len => state
     case prev =>
-      val stack = format.tail(meta, conf.value, prev.map(_._2))
-      cache(meta.path) = (meta.len, stack)
-      stack
+      val state = tail.advance(meta, conf.value, prev.map(_._2))
+      cache(meta.path) = (meta.len, state)
+      state
   }
 
   override def initialOffset(): Offset = SpecStreamOffset(Map.empty)
   override def deserializeOffset(json: String): Offset = SpecStreamOffset.fromJson(json)
 
-  override def latestOffset(): Offset =
-    SpecStreamOffset(SpecSchema.expand(paths, conf.value).map(m => m.path -> refresh(m).size).toMap)
+  override def latestOffset(): Offset = SpecStreamOffset(
+    SpecSchema.expand(paths, conf.value).map(m => m.path -> tail.offset(refresh(m))).toMap)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SpecStreamOffset].files
@@ -346,19 +407,17 @@ class FrameMicroBatchStream(format: FrameFormat, paths: Seq[String],
       else {
         // normally latestOffset just refreshed; after a checkpoint
         // restart the cache is cold and the tail reruns here
-        val stack = cache.get(path).map(_._2).filter(_.size >= to).getOrElse {
+        val state = cache.get(path).map(_._2).filter(tail.offset(_) >= to).getOrElse {
           val p = new Path(path)
           val st = p.getFileSystem(conf.value).getFileStatus(p)
           refresh(SpecFileMeta(path, st.getLen, st.getModificationTime))
         }
-        FrameSource.partitions(path, stack, Seq((from, math.min(to, stack.size) - 1)),
-          stack.nFramesAt(to), maxPartBytes)
+        tail.partitions(path, state, from, to)
       }
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FrameReaderFactory(conf, columns)
+  override def createReaderFactory(): PartitionReaderFactory = readers
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

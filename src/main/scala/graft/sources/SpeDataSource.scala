@@ -41,8 +41,6 @@ class SpeDataSource extends FrameSource {
 
 object SpeSchema {
   val HeaderBytes = 4100
-  val DefaultMaxPartitionBytes: Long = FrameSource.DefaultMaxPartitionBytes
-  val ParallelHeaderThreshold: Int = FrameSource.ParallelHeaderThreshold
 
   val schema: StructType = StructType(Seq(
     StructField("file", StringType),

@@ -16,7 +16,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,16 +35,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * `seek`s straight to its block and reads only those bytes, so total
   * read work is O(corpus bytes), never O(scans × file bytes). For
   * more than a handful of files the index pass itself runs as a Spark
-  * job (one task per file — the same pattern as Spark's parallel
-  * partition discovery), so the driver never streams file contents;
-  * it only collects the per-scan offset table. Setting
-  * `.option("indexCache", "true")` persists each file's index to a
-  * `<file>.specidx` sidecar (validated against length+mtime) so
-  * re-reads of an unchanged corpus skip the scan pass entirely.
+  * job (one task per file, [[FrameSource.headerPass]]), so the driver
+  * never streams file contents; it only collects the per-scan offset
+  * table. `indexCache` (on by default) persists each file's index to a
+  * `<file>.specidx` sidecar (validated against length, mtime and a
+  * content fingerprint) so re-reads of an unchanged corpus skip the
+  * scan pass entirely.
   *
   * pyspec's "random access by scan number" maps onto partition
-  * PRUNING: equality/IN filters on the `scan` column skip whole
-  * partitions before any byte of their data block is read.
+  * PRUNING: equality/IN/range filters on the `scan` column skip whole
+  * partitions before any byte of their data block is read. A partition
+  * holds one scan, so the pruning is exact and those filters leave no
+  * residual — a filtered COUNT(*)/MIN/MAX(scan) still answers from the
+  * index alone. `file` equality/IN skips whole files before they are
+  * indexed.
+  *
+  * Motor names come from the `#O` lines of the header in force at each
+  * `#S`: spec rewrites its header (`#F` … `#O0`) mid-file when the
+  * motor configuration changes, and later scans follow the new names.
   *
   * Schema (one row per data point):
   *   file string, scan long, command string, date string,
@@ -64,14 +72,7 @@ class SpecDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = SpecSchema.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
-    val opts = properties.asScala
-    // `paths` is a JSON array (written by DataFrameReader.load(paths*));
-    // parse it properly so paths containing commas/quotes survive.
-    val paths = opts.get("paths")
-      .map(SpecSchema.parseJsonPaths)
-      .orElse(opts.get("path").map(Seq(_)))
-      .getOrElse(Seq.empty)
-    new SpecTable(paths)
+    new SpecTable(FrameSource.paths(properties))
   }
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -249,17 +250,21 @@ private[sources] final class BoundedInputStream(in: InputStream, limit: Long) ex
   */
 final case class SpecFileMeta(path: String, len: Long, mtime: Long)
 
-/** A file's scan index: file-level `#O` motor names plus one
-  * `(scanNo, startByte, endByteExcl)` entry per `#S` block, and the
-  * parallel per-scan POINT counts (rows the reader would emit —
-  * counted with the reader's own rules: non-# nonempty lines with ≥1
-  * parseable numeric token, MCA blocks excluded). The counts are what
-  * lets COUNT(*)/MIN/MAX(scan) aggregates answer from the index pass
-  * alone (sidecar-cached), the SPE/EDF/TIFF parity surface.
+/** One `#S` block of a SPEC file: its scan number, bytes
+  * [start, end), its point count (the rows the reader emits for it)
+  * and the `#O` motor names in force at its `#S`. The counts let
+  * COUNT(*)/MIN/MAX(scan) answer from the index alone (sidecar-cached).
   */
-final case class SpecFileIndex(path: String, motorNames: Array[String],
-                               scans: Seq[(Long, Long, Long)],
-                               points: Seq[Long])
+final case class SpecBlock(scan: Long, start: Long, end: Long, points: Long,
+                           motors: Array[String])
+
+/** What one walk over bytes [.., end) of a SPEC file found: its blocks
+  * (the last one ending at `end`), the start of the newest raw `#S`
+  * line — parseable or not — and the motor names in force there.
+  * A live tail keeps one per file and resumes at `lastHeader`.
+  */
+final case class SpecWalk(blocks: Vector[SpecBlock], lastHeader: Long,
+                          motors: Array[String], end: Long)
 
 object SpecSchema {
   val schema: StructType = StructType(Seq(
@@ -275,18 +280,6 @@ object SpecSchema {
     StructField("motors", MapType(StringType, DoubleType), nullable = true),
     StructField("data", MapType(StringType, DoubleType), nullable = true),
     StructField("mca", ArrayType(DoubleType, containsNull = false), nullable = true)))
-
-  /** Parse the DSv2 `paths` option (a JSON string array). Jackson is
-    * already on the classpath via Spark. Falls back to treating the
-    * raw string as a single path if it isn't valid JSON.
-    */
-  def parseJsonPaths(json: String): Seq[String] =
-    scala.util.Try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = mapper.readTree(json)
-      require(node.isArray)
-      (0 until node.size()).map(i => node.get(i).asText())
-    }.getOrElse(Seq(json))
 
   /** `#O`/`#L` fields are separated by TWO or more spaces (single
     * spaces can occur inside a name) — pyspec spec.py convention. */
@@ -329,60 +322,71 @@ object SpecSchema {
   */
 object SpecIndex {
   val SidecarSuffix = ".specidx"
-  /** Files-per-read below which indexing happens inline on the driver
-    * instead of as a one-task-per-file Spark job (same idea as
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold`). */
-  val ParallelThreshold = 4
 
-  /** Single streaming pass over a file: collect `#O` motor names and
-    * `(scanNo, startByte, endByteExcl)` per `#S` block. Only header
-    * prefixes are inspected; the pass is O(file bytes) and runs where
-    * it is called (driver for few files, index task otherwise).
+  /** The one pass over a SPEC file's lines, for bytes [from, to):
+    * `from` is 0 or the start of an `#S` line, and `motors` the `#O`
+    * names in force there. Every `#S` line ends the block before it; a
+    * block whose `#S` has no scan number is not listed, but its header
+    * still counts as the newest `#S`. Points are counted with the
+    * partition reader's rules: a non-# nonempty line counts iff ≥1
+    * token parses as a double, and an MCA block (`@A ...` with
+    * backslash continuations, ended by any `#S`) never counts. The
+    * `#O` lines of one header make up the motor set; an `#O` line after
+    * an `#S` starts a new set, in force from the next `#S` on.
     */
-  def indexFile(meta: SpecFileMeta, conf: Configuration): SpecFileIndex = {
-    val path = new Path(meta.path)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    try {
-      val reader = new OffsetLineReader(in)
-      val motorNames = mutable.ArrayBuffer[String]()
-      val scans = mutable.ArrayBuffer[(Long, Long, Long)]()
-      val points = mutable.ArrayBuffer[Long]()
-      var curScan = -1L
-      var curStart = -1L
-      var curPoints = 0L
-      // point counting mirrors the PARTITIONED SpecPartitionReader
-      // exactly: every #S is a block boundary (partition readers
-      // start fresh there, so #S wins over a dangling MCA
-      // continuation), an MCA block (@A ... with backslash
-      // continuations) never counts, and a non-# nonempty line
-      // counts iff ≥1 token parses as a double
-      var inMca = false
-      var line = reader.readLine()
-      while (line != null) {
-        if (line.startsWith("#S ")) {
-          if (curScan >= 0) { scans += ((curScan, curStart, reader.lineStart)); points += curPoints }
-          curScan = line.drop(3).trim.takeWhile(_.isDigit) match {
-            case "" => -1L
-            case d => d.toLong
+  def walk(path: String, conf: Configuration, from: Long, to: Long,
+           motors: Array[String]): SpecWalk = {
+    val blocks = Vector.newBuilder[SpecBlock]
+    var lastHeader = from
+    var lastMotors = motors
+    if (to > from) {
+      val p = new Path(path)
+      val in = p.getFileSystem(conf).open(p)
+      try {
+        in.seek(from)
+        val reader = new OffsetLineReader(new BoundedInputStream(in, to - from))
+        var names = motors
+        var fresh = true // the next #O line starts a new set
+        var scan = -1L
+        var points = 0L
+        var inMca = false
+        def close(end: Long): Unit =
+          if (scan >= 0) blocks += SpecBlock(scan, lastHeader, end, points, lastMotors)
+        var line = reader.readLine()
+        while (line != null) {
+          if (line.startsWith("#S ")) {
+            close(from + reader.lineStart)
+            scan = line.drop(3).trim.takeWhile(_.isDigit) match {
+              case "" => -1L
+              case d => d.toLong
+            }
+            lastHeader = from + reader.lineStart
+            lastMotors = names
+            points = 0L
+            fresh = true
+            inMca = false
           }
-          curStart = reader.lineStart
-          curPoints = 0L
-          inMca = false
+          else if (inMca) inMca = line.trim.endsWith("\\")
+          else if (line.startsWith("@A")) inMca = line.trim.endsWith("\\")
+          else if (line.startsWith("#O")) {
+            val more = SpecSchema.splitLabels(line.dropWhile(_ != ' '))
+            names = if (fresh) more else names ++ more
+            fresh = false
+          }
+          else if (scan >= 0 && !line.startsWith("#") && line.trim.nonEmpty &&
+                   line.trim.split("\\s+").exists(t => scala.util.Try(t.toDouble).isSuccess))
+            points += 1
+          line = reader.readLine()
         }
-        else if (inMca) inMca = line.trim.endsWith("\\")
-        else if (line.startsWith("@A")) inMca = line.trim.endsWith("\\")
-        else if (line.startsWith("#O")) motorNames ++= SpecSchema.splitLabels(line.dropWhile(_ != ' '))
-        else if (curScan >= 0 && !line.startsWith("#") && line.trim.nonEmpty) {
-          if (line.trim.split("\\s+")
-              .exists(t => scala.util.Try(t.toDouble).isSuccess)) curPoints += 1
-        }
-        line = reader.readLine()
-      }
-      if (curScan >= 0) { scans += ((curScan, curStart, reader.position)); points += curPoints }
-      SpecFileIndex(meta.path, motorNames.toArray, scans.toSeq, points.toSeq)
-    } finally in.close()
+        close(to)
+      } finally in.close()
+    }
+    SpecWalk(blocks.result(), lastHeader, lastMotors, to)
   }
+
+  /** Every block of a complete file. */
+  def indexFile(meta: SpecFileMeta, conf: Configuration): Seq[SpecBlock] =
+    walk(meta.path, conf, 0L, meta.len, Array.empty).blocks
 
   /** Index with sidecar caching: a valid `<file>.specidx` (matching
     * length+mtime+content fingerprint) short-circuits the scan pass;
@@ -392,7 +396,7 @@ object SpecIndex {
     * any validity check fails, so sidecars never accumulate. A sidecar
     * orphaned by deleting its spec file is inert (nothing reads it).
     */
-  def indexWithCache(meta: SpecFileMeta, conf: Configuration, cache: Boolean): SpecFileIndex = {
+  def indexWithCache(meta: SpecFileMeta, conf: Configuration, cache: Boolean): Seq[SpecBlock] = {
     if (!cache) return indexFile(meta, conf)
     readSidecar(meta, conf).getOrElse {
       val idx = indexFile(meta, conf)
@@ -430,14 +434,15 @@ object SpecIndex {
   }
 
   /** Sidecar wire format (one record per line, tab-separated):
-    *   specidx\tv3\t<len>\t<mtime>\t<crc of first+last 4KiB>
-    *   O\tname1\tname2...
+    *   specidx\tv4\t<len>\t<mtime>\t<crc of first+last 4KiB>
+    *   O\tname1\tname2...   (motor names of the S records after it)
     *   S\t<scanNo>\t<startByte>\t<endByte>\t<nPoints>
     * Older sidecars (v1 without fingerprint, v2 without per-scan
-    * point counts) fail the version check and are reindexed +
-    * rewritten as v3 — the in-place rewrite is the migration.
+    * point counts, v3 with one file-wide motor list) fail the version
+    * check and are reindexed + rewritten as v4 — the in-place rewrite
+    * is the migration.
     */
-  def readSidecar(meta: SpecFileMeta, conf: Configuration): Option[SpecFileIndex] =
+  def readSidecar(meta: SpecFileMeta, conf: Configuration): Option[Seq[SpecBlock]] =
     scala.util.Try {
       val p = sidecarPath(meta)
       val fs = p.getFileSystem(conf)
@@ -446,27 +451,35 @@ object SpecIndex {
       val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
       val lines = text.linesIterator.toArray
       val head = lines.head.split('\t')
-      if (head.length != 5 || head(0) != "specidx" || head(1) != "v3" ||
+      if (head.length != 5 || head(0) != "specidx" || head(1) != "v4" ||
           head(2).toLong != meta.len || head(3).toLong != meta.mtime ||
           head(4).toLong != fingerprint(meta, conf)) return None
-      val motors = lines.collectFirst { case l if l.startsWith("O\t") => l.split('\t').drop(1) }
-        .getOrElse(Array.empty[String])
-      val recs = lines.collect { case l if l.startsWith("S\t") =>
-        val t = l.split('\t'); ((t(1).toLong, t(2).toLong, t(3).toLong), t(4).toLong)
-      }.toSeq
-      Some(SpecFileIndex(meta.path, motors, recs.map(_._1), recs.map(_._2)))
+      var motors = Array.empty[String]
+      Some(lines.toSeq.flatMap { l =>
+        val t = l.split('\t')
+        t(0) match {
+          case "O" => motors = t.drop(1); None
+          case "S" => Some(SpecBlock(t(1).toLong, t(2).toLong, t(3).toLong, t(4).toLong, motors))
+          case _ => None
+        }
+      })
     }.toOption.flatten
 
-  def writeSidecar(meta: SpecFileMeta, idx: SpecFileIndex, conf: Configuration): Unit = {
+  def writeSidecar(meta: SpecFileMeta, blocks: Seq[SpecBlock], conf: Configuration): Unit = {
     val p = sidecarPath(meta)
     val fs = p.getFileSystem(conf)
     val out = fs.create(p, true)
     try {
       val sb = new StringBuilder
-      sb.append(s"specidx\tv3\t${meta.len}\t${meta.mtime}\t${fingerprint(meta, conf)}\n")
-      if (idx.motorNames.nonEmpty) sb.append("O\t").append(idx.motorNames.mkString("\t")).append('\n')
-      idx.scans.zip(idx.points).foreach { case ((no, s, e), np) =>
-        sb.append(s"S\t$no\t$s\t$e\t$np\n") }
+      sb.append(s"specidx\tv4\t${meta.len}\t${meta.mtime}\t${fingerprint(meta, conf)}\n")
+      var motors = Array.empty[String]
+      blocks.foreach { b =>
+        if (!b.motors.sameElements(motors)) {
+          motors = b.motors
+          sb.append("O").append(motors.map("\t" + _).mkString).append('\n')
+        }
+        sb.append(s"S\t${b.scan}\t${b.start}\t${b.end}\t${b.points}\n")
+      }
       out.write(sb.toString.getBytes(StandardCharsets.UTF_8))
     } finally out.close()
   }
@@ -475,6 +488,12 @@ object SpecIndex {
 final case class SpecInputPartition(path: String, scanNo: Long,
                                     startByte: Long, endByte: Long,
                                     motorNames: Array[String]) extends InputPartition
+
+object SpecInputPartition {
+  /** Bytes [b.start, end) of block `b`. */
+  def apply(path: String, b: SpecBlock, end: Long): SpecInputPartition =
+    SpecInputPartition(path, b.scan, b.start, end, b.motors)
+}
 
 class SpecTable(paths: Seq[String]) extends Table with SupportsRead with SupportsWrite {
   override def name(): String = s"spec(${paths.mkString(",")})"
@@ -504,129 +523,112 @@ class SpecScanBuilder(paths: Seq[String], keepLast: Boolean = false,
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
-  private var scanEq: Option[Set[Long]] = None
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = SpecSchema.schema
-
   // Column pruning: a `select(file, scan)` must not pay for building
   // the motors/data maps and mca arrays of every point.
+  private var required: StructType = SpecSchema.schema
+  private var wanted = FrameFilter("scan")
+  private var fileEq: Option[Set[String]] = None
+  private var aggTags: Option[Seq[String]] = None
+
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  private var scanLo: Long = Long.MinValue
-  private var scanHi: Long = Long.MaxValue
-  private var fileEq: Option[Set[String]] = None
-
-  private def longOf(v: Any): Option[Long] = v match {
-    case l: Long => Some(l)
-    case i: Int => Some(i.toLong)
-    case _ => None
-  }
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val wanted = filters.collect {
-      case EqualTo("scan", v) if longOf(v).isDefined => Set(longOf(v).get)
-      case In("scan", vs) => vs.flatMap(longOf).toSet
-    }
-    if (wanted.nonEmpty) scanEq = Some(wanted.reduce(_ intersect _))
-    // range predicates prune too (a scan number is monotone in
-    // acquisition order, so "scans after 100" is a common access)
-    filters.foreach {
-      case GreaterThan("scan", v) => longOf(v).foreach(l => scanLo = math.max(scanLo, l + 1))
-      case GreaterThanOrEqual("scan", v) => longOf(v).foreach(l => scanLo = math.max(scanLo, l))
-      case LessThan("scan", v) => longOf(v).foreach(l => scanHi = math.min(scanHi, l - 1))
-      case LessThanOrEqual("scan", v) => longOf(v).foreach(l => scanHi = math.min(scanHi, l))
-      case _ => ()
-    }
+    val (accepted, rest) = filters.partition(wanted.accepts)
+    wanted = accepted.foldLeft(wanted)(_ and _)
     // file-equality filters skip whole FILES before they are indexed
-    // (at corpus scale the index pass itself is the cost to avoid)
-    val wantedFiles = filters.collect {
-      case EqualTo("file", v: String) => Set(v)
-      case In("file", vs) => vs.collect { case s: String => s }.toSet
+    // (at corpus scale the index pass itself is the cost to avoid);
+    // they stay residual
+    val files = rest.collect {
+      case f @ EqualTo("file", v: String) => f -> Set(v)
+      case f @ In("file", vs) => f -> vs.collect { case s: String => s }.toSet
     }
-    if (wantedFiles.nonEmpty) fileEq = Some(wantedFiles.reduce(_ intersect _))
-    pushed = filters.filter {
-      case EqualTo("scan", _) | In("scan", _) => true
-      case GreaterThan("scan", _) | GreaterThanOrEqual("scan", _) => true
-      case LessThan("scan", _) | LessThanOrEqual("scan", _) => true
-      case EqualTo("file", _) | In("file", _) => true
-      case _ => false
-    }
-    filters // all filters stay as residual (pruning is an extra win)
+    if (files.nonEmpty) fileEq = Some(files.map(_._2).reduce(_ intersect _))
+    pushed = accepted ++ files.map(_._1)
+    rest
   }
   override def pushedFilters(): Array[Filter] = pushed
 
-  private def scanWanted(no: Long): Boolean =
-    no >= scanLo && no <= scanHi && scanEq.forall(_.contains(no))
-
-  /** All file indexes, honoring pushed file-equality pruning. Index
-    * off the driver once the corpus is more than a handful of files:
-    * one task per file, collecting only the offset tables (metadata,
-    * not data) — the driver never streams file bytes. */
-  private def computeIndexes(): Seq[SpecFileIndex] = {
-    val spark = SparkSession.active
-    val hconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val files = SpecSchema.expand(paths, hconf.value)
-      .filter(f => fileEq.forall(_.contains(f.path)))
-    val cache = indexCache
-    if (files.size <= SpecIndex.ParallelThreshold)
-      files.map(SpecIndex.indexWithCache(_, hconf.value, cache))
-    else
-      spark.sparkContext.parallelize(files, files.size)
-        .map(SpecIndex.indexWithCache(_, hconf.value, cache))
-        .collect().toSeq.sortBy(_.path)
-  }
-
-  /** One ((scanNo, start, end), nPoints) per scan block the read
-    * should cover: keepLast dedup then pushed scan pruning. */
-  private def wantedOf(idx: SpecFileIndex): Seq[((Long, Long, Long), Long)] = {
-    val zipped = idx.scans.zip(idx.points)
-    val base =
-      if (keepLast)
-        zipped.groupBy(_._1._1).values.map(_.maxBy(_._1._2)).toSeq.sortBy(_._1._2)
-      else zipped
-    base.filter { case ((no, _, _), _) => scanWanted(no) }
-  }
-
-  // Pushed aggregate tags — the SPE/EDF/TIFF parity surface (#442):
-  // ungrouped COUNT(*) / MIN / MAX(scan) answer from the index pass
-  // alone (sidecar-cached — no data bytes stream). Partial semantics;
-  // Spark final-merges. Spark only attempts aggregate pushdown when
-  // no residual filters remain, and this source deliberately keeps
-  // every filter residual, so the agg path serves the unfiltered
-  // corpus-audit queries ("how many points / which scan range").
-  private var aggTags: Option[Seq[String]] = None
+  // Ungrouped COUNT(*) / MIN / MAX(scan) answer from the index pass
+  // alone (sidecar-cached — no data bytes stream). Spark attempts it
+  // only when no residual filter remains, which `scan` filters never
+  // leave.
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     aggTags = IndexAggScan.tags(agg, "scan")
     aggTags.isDefined
   }
 
+  /** (file, block) per scan block the read covers: the pushed file
+    * pruning, then the keepLast dedup, then the pushed scan pruning. */
+  private def planned(): Seq[(String, SpecBlock)] = {
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val files = SpecSchema.expand(paths, conf).filter(f => fileEq.forall(_.contains(f.path)))
+    val cache = indexCache // the task closure must not capture this builder
+    files.zip(FrameSource.headerPass(files, conf)(SpecIndex.indexWithCache(_, _, cache)))
+      .flatMap { case (meta, blocks) =>
+        val kept =
+          if (keepLast) blocks.groupBy(_.scan).values.map(_.maxBy(_.start)).toSeq.sortBy(_.start)
+          else blocks
+        kept.filter(b => wanted.contains(b.scan)).map(meta.path -> _)
+      }
+  }
+
   override def build(): Scan = aggTags match {
     case Some(tags) => new IndexAggScan(tags,
-      () => computeIndexes().flatMap(idx =>
-        wantedOf(idx).map { case ((no, _, _), np) => (no, no, np) }))
+      () => planned().map { case (_, b) => (b.scan, b.scan, b.points) })
     case None => rowScan()
   }
+
+  private def hadoopConf() =
+    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
 
   private def rowScan(): Scan = new Scan with Batch {
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] =
-      computeIndexes().flatMap { idx =>
-        wantedOf(idx).map { case ((no, s, e), _) =>
-          SpecInputPartition(idx.path, no, s, e, idx.motorNames)
-        }
-      }.toArray
+      planned().map { case (path, b) => SpecInputPartition(path, b, b.end) }.toArray
     override def createReaderFactory(): PartitionReaderFactory =
-      new SpecReaderFactory(new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()), required.fieldNames)
-
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new SpecMicroBatchStream(paths,
-        new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-        required.fieldNames, emitLast)
+      new SpecReaderFactory(hadoopConf(), required.fieldNames)
+    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+      val conf = hadoopConf()
+      new LiveMicroBatchStream(new SpecTail(emitLast), paths, conf,
+        new SpecReaderFactory(conf, required.fieldNames))
+    }
   }
+}
+
+/** The `readStream` half of the format, for watching an experiment as
+  * it acquires: spec instruments APPEND `#S` blocks to a growing file,
+  * so each micro-batch emits the scans that became COMPLETE since the
+  * last offset. A scan is complete once a later `#S` exists — parseable
+  * or not, as the batch reader also ends a block there; the trailing
+  * (possibly still-writing) block is held back until the next header
+  * appears (`emitLast` emits it too, for corpora known closed).
+  *
+  * A file's state is its [[SpecWalk]] so far. Its offset is the byte
+  * start of the newest raw `#S` (the file length under `emitLast`), so
+  * recovery replans the exact same scans from the checkpoint. A growing
+  * file is walked again only from that `#S` on: bytes before it are
+  * never re-read.
+  */
+final class SpecTail(emitLast: Boolean) extends LiveTail[SpecWalk] {
+  override def advance(meta: SpecFileMeta, conf: Configuration,
+                       prev: Option[SpecWalk]): SpecWalk = {
+    val p = prev.getOrElse(SpecWalk(Vector.empty, 0L, Array.empty, 0L))
+    val w = SpecIndex.walk(meta.path, conf, p.lastHeader, meta.len, p.motors)
+    w.copy(blocks = p.blocks.takeWhile(_.start < p.lastHeader) ++ w.blocks)
+  }
+
+  override def offset(w: SpecWalk): Long = if (emitLast) w.end else w.lastHeader
+
+  // a block that starts before `to` ends at or before it, except the
+  // trailing block an emitLast offset cut: replays read it to `to`
+  override def partitions(path: String, w: SpecWalk, from: Long,
+                          to: Long): Seq[InputPartition] =
+    w.blocks.filter(b => b.start >= from && b.start < to)
+      .map(b => SpecInputPartition(path, b, math.min(b.end, to)))
 }
 
 /** Per-file committed byte positions — the stream's offset. */
@@ -648,139 +650,6 @@ object SpecStreamOffset {
     node.fieldNames().asScala.foreach(f => m(f) = node.get(f).asLong())
     SpecStreamOffset(m.toMap)
   }
-}
-
-/** Structured-Streaming source over LIVE spec files — the `readStream`
-  * half of the format, for watching an experiment as it acquires:
-  * spec instruments APPEND `#S` blocks to a growing file, so each
-  * micro-batch emits the scans that became COMPLETE since the last
-  * offset. A scan is complete once a later `#S` exists; the trailing
-  * (possibly still-writing) block is held back until the next header
-  * appears (`option("emitLast", "true")` emits it too, for corpora
-  * known closed). New files appearing under the path are picked up
-  * automatically.
-  *
-  * Offsets are per-file byte positions of the newest safe boundary,
-  * so recovery replans the exact same scans from the checkpoint (the
-  * byte range [start, end) re-indexes deterministically); each
-  * trigger re-reads only bytes PAST the previous boundary, never the
-  * whole file. Partitions/readers are the batch ones — one partition
-  * per newly completed scan, seek + bounded read.
-  */
-class SpecMicroBatchStream(paths: Seq[String], conf: SerializableHadoopConf,
-                           columns: Array[String], emitLast: Boolean)
-    extends MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  // file-level #O names live in the header (before the first #S), so
-  // they are read once per file and cached for the stream's lifetime
-  private val motorCache = mutable.Map[String, Array[String]]()
-
-  private def headerMotors(path: String): Array[String] =
-    motorCache.getOrElseUpdate(path, {
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf.value)
-      val in = fs.open(p)
-      try {
-        val reader = new OffsetLineReader(in)
-        val names = mutable.ArrayBuffer[String]()
-        var line = reader.readLine()
-        while (line != null && !line.startsWith("#S ")) {
-          if (line.startsWith("#O")) names ++= SpecSchema.splitLabels(line.dropWhile(_ != ' '))
-          line = reader.readLine()
-        }
-        names.toArray
-      } finally in.close()
-    })
-
-  /** Scan blocks in [from, to): seek to `from` (always 0 or a prior
-    * `#S` boundary) and walk forward. The block starting at the last
-    * `#S` before `to` ends AT `to` by construction of latestOffset. */
-  private def scansInRange(path: String, from: Long, to: Long): Seq[(Long, Long, Long)] =
-    scanBlocks(path, from, to)._1
-
-  /** (emittable scan blocks, safe boundary). The boundary is the byte
-    * start of the LAST raw `#S` line in range — parseable or NOT — or
-    * `from` when none: a malformed header still terminates (and so
-    * completes) the block before it, and the batch reader emits that
-    * completed block, so the stream must advance past it too.
-    * Blocks whose own header doesn't parse are dropped from the
-    * emit list (matching batch), but never hold the boundary back.
-    */
-  private def scanBlocks(path: String, from: Long, to: Long): (Seq[(Long, Long, Long)], Long) = {
-    if (to <= from) return (Seq.empty, from)
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf.value)
-    val in = fs.open(p)
-    try {
-      in.seek(from)
-      val reader = new OffsetLineReader(new BoundedInputStream(in, to - from))
-      val scans = mutable.ArrayBuffer[(Long, Long, Long)]()
-      var curScan = -1L
-      var curStart = -1L
-      var lastHeader = from
-      var line = reader.readLine()
-      while (line != null) {
-        if (line.startsWith("#S ")) {
-          if (curScan >= 0) scans += ((curScan, curStart, from + reader.lineStart))
-          curScan = line.drop(3).trim.takeWhile(_.isDigit) match {
-            case "" => -1L
-            case d => d.toLong
-          }
-          curStart = from + reader.lineStart
-          lastHeader = from + reader.lineStart
-        }
-        line = reader.readLine()
-      }
-      if (curScan >= 0) scans += ((curScan, curStart, to))
-      (scans.toSeq, lastHeader)
-    } finally in.close()
-  }
-
-  override def initialOffset(): Offset = SpecStreamOffset(Map.empty)
-
-  override def deserializeOffset(json: String): Offset = SpecStreamOffset.fromJson(json)
-
-  // tracked per stream instance purely to re-scan only new bytes;
-  // correctness never depends on it (restart rescans from 0)
-  private val seen = mutable.Map[String, Long]()
-
-  override def latestOffset(): Offset = {
-    val files = SpecSchema.expand(paths, conf.value)
-    val offsets = files.map { meta =>
-      val prev = seen.getOrElse(meta.path, 0L)
-      val safe =
-        if (emitLast) meta.len
-        else {
-          // newest raw #S start at or past the previous boundary:
-          // bytes before it are complete blocks, the block after it
-          // may still be appending. Raw (not just parseable) headers
-          // advance this, else a malformed #S would withhold the
-          // completed block before it forever.
-          scanBlocks(meta.path, prev, meta.len)._2
-        }
-      seen(meta.path) = safe
-      meta.path -> safe
-    }.toMap
-    SpecStreamOffset(offsets)
-  }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SpecStreamOffset].files
-    val e = end.asInstanceOf[SpecStreamOffset].files
-    e.toSeq.sortBy(_._1).flatMap { case (path, to) =>
-      val from = s.getOrElse(path, 0L)
-      scansInRange(path, from, to).map { case (no, b0, b1) =>
-        SpecInputPartition(path, no, b0, b1, headerMotors(path))
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SpecReaderFactory(conf, columns)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 class SpecReaderFactory(conf: SerializableHadoopConf,

@@ -50,6 +50,10 @@ class EdfDataSourceSpec extends SparkSpec {
     assert(one.length === 1 && one(0).getAs[Seq[Double]](0) === frames(3).toSeq)
     val range = df.filter(col("frame") >= 4).count()
     assert(range === 2)
+    // strict bounds past the end of Long select nothing (they must not
+    // wrap round to the opposite end and select every frame)
+    assert(df.filter(col("frame") > Long.MaxValue).count() === 0)
+    assert(df.filter(col("frame") < Long.MinValue).count() === 0)
     // pixels pruned away -> pure header/metadata read
     val meta = df.select("frame", "width", "n_frames").collect()
     assert(meta.length === 6 && meta.forall(_.getAs[Long]("n_frames") === 6L))
@@ -242,7 +246,7 @@ class EdfDataSourceSpec extends SparkSpec {
 
   test("many files plan via the distributed header-read job") {
     val dir = java.nio.file.Files.createTempDirectory("edfpar").toFile
-    val n = graft.sources.SpeSchema.ParallelHeaderThreshold + 4
+    val n = graft.sources.FrameSource.ParallelHeaderThreshold + 4
     for (k <- 1 to n)
       EdfWriterUtil.write(new java.io.File(dir, f"s$k%03d.edf").getAbsolutePath, conf, 2, 1,
         "UnsignedShort", true, Seq(Array(k.toDouble, 0.0), Array(k.toDouble, 1.0)))

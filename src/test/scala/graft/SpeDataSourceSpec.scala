@@ -193,7 +193,7 @@ class SpeDataSourceSpec extends SparkSpec {
 
   test("many files plan via the distributed header-read job") {
     val dir = Files.createTempDirectory("spepar").toFile
-    val n = SpeSchema.ParallelHeaderThreshold + 4
+    val n = graft.sources.FrameSource.ParallelHeaderThreshold + 4
     for (k <- 1 to n)
       mkSpe(dir, f"s$k%03d.spe", 2, 1, 3, Seq(Array(k.toDouble, 0.0), Array(k.toDouble, 1.0)))
     val df = spark.read.format("spe").load(dir.getAbsolutePath)

@@ -359,19 +359,19 @@ class SpecDataSourceSpec extends SparkSpec {
     val sidecar = new java.io.File(dir, "c.spec.specidx")
     assert(sidecar.exists(), "sidecar index not written")
     val content = new String(Files.readAllBytes(sidecar.toPath))
-    assert(content.startsWith(s"specidx\tv3\t${f.length()}\t"))
+    assert(content.startsWith(s"specidx\tv4\t${f.length()}\t"))
     // cached index is used on re-read and yields identical partitions
     val again = spark.read.format("spec").load(f.getPath)
     assert(again.count() == 3 && again.filter(col("scan") === 2).count() == 1)
     // a sidecar with a wrong length (stale) is ignored, not trusted
     Files.write(sidecar.toPath,
-      "specidx\tv3\t999999\t0\t0\nS\t1\t0\t10\t2\n".getBytes("UTF-8"))
+      "specidx\tv4\t999999\t0\t0\nS\t1\t0\t10\t2\n".getBytes("UTF-8"))
     assert(spark.read.format("spec").option("indexCache", "false").load(f.getPath).count() == 3)
     assert(spark.read.format("spec").load(f.getPath).count() == 3)
-    // ... and the read above overwrote it with a fresh valid v3 (GC =
+    // ... and the read above overwrote it with a fresh valid v4 (GC =
     // eviction-by-rewrite, one sidecar per file)
     val healed = new String(Files.readAllBytes(sidecar.toPath))
-    assert(healed.startsWith(s"specidx\tv3\t${f.length()}\t"))
+    assert(healed.startsWith(s"specidx\tv4\t${f.length()}\t"))
     assert(!healed.contains("999999"))
   }
 
@@ -396,14 +396,15 @@ class SpecDataSourceSpec extends SparkSpec {
   }
 
   test("many files index via the distributed job path") {
-    // > SpecIndex.ParallelThreshold files => one index task per file
+    // > ParallelHeaderThreshold files => one index task per file
     val dir = Files.createTempDirectory("specpar").toFile
-    for (i <- 1 to 6)
+    val n = graft.sources.FrameSource.ParallelHeaderThreshold + 2
+    for (i <- 1 to n)
       Files.write(new java.io.File(dir, f"r$i%02d.spec").toPath,
         s"#S 1 scan$i\n#L th  det\n0 $i\n1 ${i * 10}\n".getBytes("UTF-8"))
     val df = spark.read.format("spec").load(dir.getPath)
-    assert(df.count() == 12)
-    assert(df.select("file").distinct().count() == 6)
+    assert(df.count() == 2L * n)
+    assert(df.select("file").distinct().count() == n)
     val v = df.filter(col("file").endsWith("r03.spec"))
       .select(element_at(col("data"), "det")).orderBy(col("point")).collect()
     assert(v.map(_.getDouble(0)).toSeq == Seq(3.0, 30.0))
@@ -669,5 +670,119 @@ class SpecDataSourceSpec extends SparkSpec {
     // a residual filter falls back to the row scan — same answer
     val filtered = df.filter(col("scan") === 2).count()
     assert(filtered === 3L)
+  }
+
+  test("scan filters are exact: no residual, so a filtered COUNT(*) pushes down") {
+    val df = spark.read.format("spec").load(fixture)
+    val cq = df.filter(col("scan") >= 2).groupBy().count()
+    val cplan = cq.queryExecution.executedPlan.toString
+    assert(cplan.contains("agg_count"), cplan)
+    assert(cq.collect()(0).getLong(0) === 3L)
+    val in = df.filter(col("scan").isin(1, 2, 5)).agg(count(lit(1)), max(col("scan")))
+    assert(in.queryExecution.executedPlan.toString.contains("agg_max_scan"))
+    assert(in.collect()(0).toSeq === Seq(9L, 2L))
+    // strict bounds past the end of Long select nothing
+    assert(df.filter(col("scan") > Long.MaxValue).count() === 0L)
+    assert(df.filter(col("scan") < Long.MinValue).count() === 0L)
+    assert(df.filter(col("scan") > Long.MaxValue).select("scan").collect().isEmpty)
+  }
+
+  test("motor names follow the header in force after a mid-file #O rewrite") {
+    val dir = Files.createTempDirectory("specreheader").toFile
+    val f = new java.io.File(dir, "rh.spec")
+    Files.write(f.toPath,
+      """#F rh.spec
+        |#O0 A  B
+        |
+        |#S 1 ascan a 0 1 1 1
+        |#P0 1 2
+        |#L x  y
+        |0 10
+        |
+        |#F rh.spec
+        |#O0 C  D
+        |
+        |#S 2 ascan c 0 1 1 1
+        |#P0 3 4
+        |#L x  y
+        |0 20
+        |
+        |#S 3 ascan c 0 1 1 1
+        |#P0 5 6
+        |#L x  y
+        |0 30
+        |""".stripMargin.getBytes("UTF-8"))
+    def motors(df: org.apache.spark.sql.DataFrame): Map[Long, Map[String, Double]] =
+      df.select("scan", "motors").collect()
+        .map(r => r.getLong(0) -> r.getMap[String, Double](1).toMap).toMap
+    val want = Map(1L -> Map("A" -> 1.0, "B" -> 2.0), 2L -> Map("C" -> 3.0, "D" -> 4.0),
+      3L -> Map("C" -> 5.0, "D" -> 6.0))
+    // batch: the first read indexes and writes the sidecar, the second
+    // is served from it
+    assert(motors(spark.read.format("spec").load(f.getPath)) == want)
+    val sidecar = new java.io.File(dir, "rh.spec.specidx")
+    assert(new String(Files.readAllBytes(sidecar.toPath)).linesIterator
+      .count(_.startsWith("O\t")) == 2)
+    val mtime = sidecar.lastModified()
+    assert(motors(spark.read.format("spec").load(f.getPath)) == want)
+    assert(sidecar.lastModified() == mtime, "sidecar was rewritten, not hit")
+    // stream: the walk that resumes at scan 3 carries the rewritten names
+    val q = spark.readStream.format("spec").load(f.getPath)
+      .select("scan", "motors")
+      .writeStream.format("memory").queryName("spec_reheader")
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      assert(motors(spark.table("spec_reheader")) == want - 3L)
+      Files.write(f.toPath, "\n#S 4 ascan c 0 1 1 1\n".getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.APPEND)
+      q.processAllAvailable()
+      assert(motors(spark.table("spec_reheader")) == want)
+    } finally q.stop()
+  }
+
+  test("streaming restart on the same checkpoint emits every scan exactly once") {
+    val dir = Files.createTempDirectory("specrestart").toFile
+    val f = new java.io.File(dir, "live.spec")
+    val out = new java.io.File(dir, "out").getPath
+    val ckpt = new java.io.File(dir, "ckpt").getPath
+    def scan(n: Int, motor: Double, points: Int): String =
+      s"\n#S $n ascan th 0 1 $points 1\n#P0 $motor\n#L th  det\n" +
+        (0 until points).map(i => s"$i ${n * 100 + i}\n").mkString
+    def append(s: String): Unit =
+      Files.write(f.toPath, s.getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    def run(): Unit = {
+      val q = spark.readStream.format("spec").load(f.getPath)
+        .select(col("scan"), col("point"), element_at(col("data"), "det").as("det"),
+          col("motors"))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    append("#F live.spec\n#O0 Theta\n" + scan(1, 0.1, 2) + scan(2, 0.2, 3) + scan(3, 0.3, 1))
+    run() // scans 1, 2; 3 is held back
+    append(scan(4, 0.4, 2) + "\n#O0 Phi\n" + scan(5, 0.5, 3) + scan(6, 0.6, 1))
+    run() // a fresh stream on the same checkpoint: scans 3, 4, 5
+    // a crash between the offset log and the commit: the restart re-runs
+    // the uncommitted batch, planning it before any latestOffset call
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).map(_.toInt).max
+    for (log <- Seq(commits, new java.io.File(out, "_spark_metadata"))) {
+      assert(new java.io.File(log, last.toString).delete())
+      new java.io.File(log, s".$last.crc").delete()
+    }
+    append(scan(7, 0.7, 1))
+    run() // the re-run batch (3, 4, 5), then scan 6
+    val rows = spark.read.parquet(out).collect()
+    val perScan = rows.groupBy(_.getLong(0))
+    assert(perScan.keySet == (1L to 6L).toSet)
+    val points = Map(1L -> 2, 2L -> 3, 3L -> 1, 4L -> 2, 5L -> 3, 6L -> 1)
+    perScan.foreach { case (s, rs) =>
+      assert(rs.map(_.getLong(1)).sorted.toSeq == (0L until points(s)), s"scan $s")
+      assert(rs.map(_.getDouble(2)).sorted.toSeq == (0 until points(s)).map(i => s * 100.0 + i))
+      val name = if (s <= 4) "Theta" else "Phi"
+      assert(rs.forall(_.getMap[String, Double](3).toMap == Map(name -> s / 10.0)), s"scan $s")
+    }
   }
 }

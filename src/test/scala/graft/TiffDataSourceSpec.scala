@@ -245,7 +245,7 @@ class TiffDataSourceSpec extends SparkSpec {
 
   test("many files plan via the distributed header-read job") {
     val dir = java.nio.file.Files.createTempDirectory("tiffpar").toFile
-    val n = graft.sources.SpeSchema.ParallelHeaderThreshold + 4
+    val n = graft.sources.FrameSource.ParallelHeaderThreshold + 4
     for (k <- 1 to n)
       TiffWriterUtil.write(new java.io.File(dir, f"s$k%03d.tiff").getAbsolutePath, conf, 2, 1,
         "uint16", true, Seq(Array(k.toDouble, 0.0), Array(k.toDouble, 1.0)))
